@@ -87,7 +87,7 @@ def score_sql_fast_spark(text_col: str) -> str:
     over the same values in the same order (chunk class = same BIGINT sum;
     chunk char length = sum(token lens) + (k-1) separators = the
     ``array_join`` length; num/den accumulate in the same sequence), so
-    the equivalence is exact, and tests/test_text_functions.py pins it
+    the equivalence is exact, and tests/test_sentiment.py pins it
     against the template on real fixtures plus edge cases. Kept separate
     from the dual-dialect template because DuckDB list_transform handles
     the template form fine — only the Spark streaming path needed the
@@ -212,7 +212,7 @@ def score_texts_pandas_vec(texts, lexicon: dict[str, int] | None = None):
     time on the streaming hot path). This computes the identical scores
     through C-speed explode/groupby kernels.
 
-    Exactness argument (pinned by test_text_functions'
+    Exactness argument (pinned by test_sentiment's
     vec-vs-reference suite, not just claimed): per-chunk vsum/cls/clen are
     small exact integers; num = Σ cls·clen and den = Σ clen are sums of
     exact integers far below 2^53, so float64 accumulation order cannot

@@ -26,6 +26,7 @@ from pyspark.sql.window import Window
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import driver_rows_df, fan_out_small, load_table
+from ..staging import staged
 
 # PII patterns, shared verbatim by both engines (no backslash classes, so
 # the literal is identical in Java regex and RE2).
@@ -919,9 +920,6 @@ def _dsir_bucket_arr_sql(d: str) -> str:
     return dl.transform(d, feats, "t", bucket)
 
 
-_DSIR_INST_MEMO: dict[tuple[str, str], DataFrame] = {}
-_DSIR_PERDOC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 # Coarse range key for the bucket-split top-K (floor(dsir_logw * SCALE)).
 # 32 slices the observed log-weight range ([-4.3, 1.0] at sf0.1) into ~144
 # occupied buckets with max occupancy ~2% of the pool; the bucket count is
@@ -985,16 +983,13 @@ def _topk_selected_bucket_split(df: DataFrame, k: int) -> DataFrame:
     )
 
 
+@staged
 def dsir_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, b) — one row per hashed-feature instance,
     materialized once per (application, sf_dir): docs_dsir_weights and
     corpus_pipeline_v3 both consume it (and each reads it 2-3 times inside
     its own job), so the explode + md5 fold runs once per process — the
     same staging-table tier as bigram_instance_staging."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _DSIR_INST_MEMO.get(key)
-    if memo is not None:
-        return memo
     from .dedup import tokenized_docs_staging  # r8: tokenize-once staging
 
     out = (
@@ -1006,11 +1001,10 @@ def dsir_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.expr(_dsir_bucket_arr_sql(dl.SPARK))).alias("b"),
         )
     )
-    out = audit_plan("dsir_feature_instances", out).localCheckpoint()
-    _DSIR_INST_MEMO[key] = out
-    return out
+    return audit_plan("dsir_feature_instances", out).localCheckpoint()
 
 
+@staged
 def dsir_perdoc_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, n_features, dsir_logw) — the per-doc DSIR
     log-weight relation, materialized once per (application, sf_dir).
@@ -1029,10 +1023,6 @@ def dsir_perdoc_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact integers), then a map-side broadcast equi-join back onto the
     instances and one hash agg keyed doc_id. Since r11 nothing in the
     DSIR path plans an unpartitioned window."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _DSIR_PERDOC_MEMO.get(key)
-    if memo is not None:
-        return memo
     inst = dsir_instance_staging(spark, sf_dir)
     counts = inst.groupBy("b").agg(
         F.count(F.lit(1)).alias("cr"),
@@ -1066,9 +1056,7 @@ def dsir_perdoc_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("lr"), 4).alias("dsir_logw"),
         )
     )
-    out = audit_plan("dsir_perdoc", perdoc).localCheckpoint()
-    _DSIR_PERDOC_MEMO[key] = out
-    return out
+    return audit_plan("dsir_perdoc", perdoc).localCheckpoint()
 
 
 def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,7 @@ from pyspark.sql.window import Window as W
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import fan_out_small, load_table
+from ..staging import staged
 
 SHINGLE = 3            # tokens per shingle
 MINHASH_K = 8          # minhash functions (salted md5 mins)
@@ -78,52 +79,31 @@ def shingle_rel(docs: DataFrame) -> DataFrame:
 # pipeline materializes tokens once at ingest. One localCheckpoint per
 # (application, sf_dir); registered as the FIRST staging line so its build
 # cost is a named number and every consumer line prices only its own work.
-_TOKD_MEMO: dict[tuple[str, str], DataFrame] = {}
-_TOKD_FANNED: dict[tuple[str, str], bool] = {}
-
-
-def tokenized_docs_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, source, toks) — documents tokenized once, shared by
-    every token-consuming staging build."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _TOKD_MEMO.get(key)
-    if memo is not None:
-        return memo
+@staged
+def _tokenized_docs(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, bool]":
+    """(checkpoint, fanned) — one staging entry, so the fan-out flag can
+    never disagree with the checkpoint it describes."""
     # fan_out_small (r14): the local fixture is one row group, so the
     # tokenize — and every shingle/bigram/dsir build stacked on this
     # checkpoint — otherwise runs as ONE task; identity at scale
     raw = load_table(spark, sf_dir, "documents")
     docs = fan_out_small(raw, spark)
-    # r15: record whether the floor FIRED (i.e. the checkpoint is
-    # fan-out-wide on a local-small corpus) so LIGHT token-grain
-    # consumers can narrow back in — see tokenized_docs_fanned.
-    _TOKD_FANNED[key] = docs is not raw
     out = audit_plan(
         "tokenized_docs",
         docs.select(
             "doc_id", "lang", "source", F.expr(dl.split_ws(dl.SPARK, "text")).alias("toks")
         ),
     ).localCheckpoint()
-    _TOKD_MEMO[key] = out
-    return out
+    # r15: record whether the floor FIRED (i.e. the checkpoint is
+    # fan-out-wide on a local-small corpus) so LIGHT token-grain
+    # consumers can narrow back in — see tokenized_docs_fanned.
+    return out, docs is not raw
 
 
-TOKEN_AGG_FAN_IN = 4  # read partitions for LIGHT consumers of a fanned ckpt
-
-
-def tokenized_docs_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenized-docs staging relation, coalesced back to a bounded
-    fan-in WHEN the checkpoint was fanned (r15, VERDICT r14 item 4). For
-    LIGHT consumers — one explode + a bounded agg — the fan-out's ~32
-    task launches (~8 ms each measured) cost more than the map work is
-    worth; coalesce is narrow (no shuffle) and the heavy shingle/DSIR
-    builds keep reading the wide form. Identity at production scale:
-    the fanned flag only sets when the scan planned below default
-    parallelism (a local-small fixture)."""
-    out = tokenized_docs_staging(spark, sf_dir)
-    if tokenized_docs_fanned(spark, sf_dir):
-        return out.coalesce(TOKEN_AGG_FAN_IN)
-    return out
+def tokenized_docs_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, source, toks) — documents tokenized once, shared by
+    every token-consuming staging build."""
+    return _tokenized_docs(spark, sf_dir)[0]
 
 
 def tokenized_docs_fanned(spark: SparkSession, sf_dir: str) -> bool:
@@ -137,18 +117,35 @@ def tokenized_docs_fanned(spark: SparkSession, sf_dir: str) -> bool:
     only when — this flag is set. At production scale the scan plans
     wide, the flag is False by construction, and consumers keep the
     scan's parallelism."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _TOKD_FANNED:
-        tokenized_docs_staging(spark, sf_dir)
-    return _TOKD_FANNED[key]
+    return _tokenized_docs(spark, sf_dir)[1]
+
+
+TOKEN_AGG_FAN_IN = 4  # read partitions for LIGHT consumers of a fanned ckpt
+
+
+def narrow_token_read(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
+    """``df`` (a token-grain relation built on the tokenized-docs staging
+    checkpoint) coalesced back to a bounded fan-in WHEN that checkpoint
+    was fanned (r15, VERDICT r14 item 4). For LIGHT consumers — one
+    explode + a bounded agg — the fan-out's ~32 task launches (~8 ms each
+    measured) cost more than the map work is worth; coalesce is narrow
+    (no shuffle) and the heavy shingle/DSIR builds keep reading the wide
+    form. Identity at production scale: the fanned flag only sets when
+    the scan planned below default parallelism (a local-small fixture)."""
+    if tokenized_docs_fanned(spark, sf_dir):
+        return df.coalesce(TOKEN_AGG_FAN_IN)
+    return df
+
+
+def tokenized_docs_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The tokenized-docs staging relation through narrow_token_read."""
+    return narrow_token_read(spark, sf_dir, tokenized_docs_staging(spark, sf_dir))
 
 
 # The UNCAPPED distinct-shingle relation sh_all is read by TWO builds (the
 # hot-list cap below and the minhash signature agg) — before r8 each
-# re-derived it from raw text. Materialized once, same memo discipline.
-_SH_ALL_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# re-derived it from raw text. Materialized once in the staging tier.
+@staged
 def shingle_rel_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh, mh32) distinct shingles for the full corpus, built
     from the tokenized-docs staging relation and materialized once per
@@ -158,10 +155,6 @@ def shingle_rel_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse inlines the md5+fold into every one of the K min() aggs
     (measured: 3.2 s vs 0.9 s for the signature build at sf0.1). Column
     pruning drops it for the consumers that only read (doc_id, sh)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _SH_ALL_MEMO.get(key)
-    if memo is not None:
-        return memo
     tokd = tokenized_docs_staging(spark, sf_dir)
     rel = tokd.select(
         "doc_id",
@@ -171,20 +164,15 @@ def shingle_rel_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id", "sh", F.expr(_minhash_src_sql(dl.SPARK)).alias("mh32")
     )
-    out = audit_plan("dedup_shingle_rel", rel).localCheckpoint()
-    _SH_ALL_MEMO[key] = out
-    return out
+    return audit_plan("dedup_shingle_rel", rel).localCheckpoint()
 
 
-# Like _PAIRS_MEMO below: the df-capped distinct-shingle relation (the
-# "non-boilerplate shingle vocabulary") is the shared staging input of the
-# exact-overlap verifiers (dedup_ngram_jaccard, dedup_containment). At
+# Like the pair relation below: the df-capped distinct-shingle relation
+# (the "non-boilerplate shingle vocabulary") is the shared staging input of
+# the exact-overlap verifiers (dedup_ngram_jaccard, dedup_containment). At
 # 100 TB it is the tokenize-and-shingle-once materialization every dedup
 # stage reads; in-process: one localCheckpoint per (application, sf_dir),
 # distributed, never collected.
-_CAPPED_SH_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def capped_shingle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The LAZY df-capped shingle plan (pre-materialization; plan-shape
     tests assert on this form): the df-per-shingle agg is map-side-partial
@@ -202,19 +190,14 @@ def capped_shingle_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sh_all.join(F.broadcast(hot), "sh", "left_anti")
 
 
+@staged
 def capped_shingle_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, sh) distinct shingles with document-frequency >
     HOT_SHINGLE_DF_CAP shingles removed, materialized once per
     (application, sf_dir) — see capped_shingle_plan for the plan shape."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _CAPPED_SH_MEMO.get(key)
-    if memo is not None:
-        return memo
-    out = audit_plan(
+    return audit_plan(
         "dedup_capped_shingles", capped_shingle_plan(spark, sf_dir)
     ).localCheckpoint()
-    _CAPPED_SH_MEMO[key] = out
-    return out
 
 
 def _oracle_shingle_ctes(src: str = "documents") -> str:
@@ -362,18 +345,11 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pair self-join and the round-7 incremental probe): materialize once per
 # (application, sf_dir) — the persisted signature table of a production
 # corpus (computed at ingest, joined forever after).
-_SIG_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def minhash_signatures_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _SIG_MEMO.get(key)
-    if memo is None:
-        memo = audit_plan(
-            "minhash_signatures_staging", minhash_signatures(spark, sf_dir)
-        ).localCheckpoint()
-        _SIG_MEMO[key] = memo
-    return memo
+    return audit_plan(
+        "minhash_signatures_staging", minhash_signatures(spark, sf_dir)
+    ).localCheckpoint()
 
 
 def _oracle_signatures() -> str:
@@ -387,13 +363,11 @@ SELECT doc_id, {", ".join(f"h{k}" for k in range(MINHASH_K))} FROM sig
 # queries consume it (dedup_minhash_pairs itself, the connected-component
 # canonicalizer, the survivor summarizer). At 100 TB you'd materialize it
 # once to parquet and point every consumer at it; in-process we model the
-# same thing with a localCheckpoint memoized per (application, sf_dir).
-# Unlike the k-means memo (driver rows), the pair relation is corpus-sized,
-# so it stays DISTRIBUTED — the memo holds a checkpointed DataFrame, never
-# collected rows.
-_PAIRS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# same thing with a localCheckpoint staged per (application, sf_dir).
+# Unlike the k-means codebook (driver rows), the pair relation is
+# corpus-sized, so it stays DISTRIBUTED — the staging entry is a
+# checkpointed DataFrame, never collected rows.
+@staged
 def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded-LSH candidate pairs with estimated Jaccard >= threshold.
 
@@ -418,11 +392,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The RESULT is materialized once per (application, sf_dir) and shared
     by the cluster/survivor consumers — the staging-table pattern (see
-    _PAIRS_MEMO note above)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _PAIRS_MEMO.get(key)
-    if memo is not None:
-        return memo
+    the note above)."""
     sig = minhash_signatures_staging(spark, sf_dir)
     hash_cols = [f"h{k}" for k in range(MINHASH_K)]
     banded = banded_rel(sig)
@@ -445,9 +415,7 @@ def dedup_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("est_jaccard") >= JACCARD_THRESHOLD)
         .select("a", "b", "est_jaccard")
     )
-    out = audit_plan("minhash_pairs_staging", out).localCheckpoint()
-    _PAIRS_MEMO[key] = out
-    return out
+    return audit_plan("minhash_pairs_staging", out).localCheckpoint()
 
 
 def _oracle_pairs_ctes(src: str = "documents") -> str:

@@ -38,6 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import load_table
+from ..staging import staged
 
 # Undirected edge iff the pair co-occurs in >= 60% of documents (relative
 # support — an absolute count would flip the graph between complete and
@@ -73,11 +74,9 @@ PR_DAMP_DEN = 100
 
 # The co-occurrence edge relation is the staging input every graph query
 # fans out from (degree stats, triangles via orientation, and tests).
-# Materialize it once per (application, sf_dir) — same pattern as dedup's
-# _PAIRS_MEMO; the relation stays distributed.
-_COOC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# Materialize it once per (application, sf_dir) in the staging tier — same
+# pattern as dedup's pair relation; the relation stays distributed.
+@staged
 def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected token co-occurrence edges (tok_a < tok_b, co-doc count w).
 
@@ -88,10 +87,6 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     fans out from this relation, so the RESULT is materialized once per
     (application, sf_dir).
     """
-    memo_key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _COOC_MEMO.get(memo_key)
-    if memo is not None:
-        return memo
     docs = load_table(spark, sf_dir, "documents")
     n_docs = docs.count()
     min_support = (COOC_SUPPORT_NUM * n_docs) // COOC_SUPPORT_DEN
@@ -135,9 +130,7 @@ def _cooc_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("w"))
         .filter(F.col("w") >= min_support)
     )
-    pairs = audit_plan("graph_cooc_edges", pairs).localCheckpoint()
-    _COOC_MEMO[memo_key] = pairs
-    return pairs
+    return audit_plan("graph_cooc_edges", pairs).localCheckpoint()
 
 
 _ORACLE_EDGE_CTES = f"""
@@ -553,19 +546,13 @@ KCORE_DEN = 5
 
 # r8 (VERDICT r7 item 3): the bipartite edge build was ~85% of
 # graph_kcore's bench line — a one-time staging cost hiding inside a query
-# number. Same memo discipline as _cooc_edges; registered as
-# staging:kcore_edges so the kcore line prices the peel rounds only.
-_KCORE_EDGES_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# number. Staged like _cooc_edges; registered as staging:kcore_edges so
+# the kcore line prices the peel rounds only.
+@staged
 def kcore_edges_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (customer, supplier) bipartite interaction edges from
     lineitem x orders, materialized once per (application, sf_dir) — the
     persisted edge table a production graph pipeline builds at ingest."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _KCORE_EDGES_MEMO.get(key)
-    if memo is not None:
-        return memo
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     e0 = (
@@ -573,9 +560,7 @@ def kcore_edges_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
         .distinct()
     )
-    out = audit_plan("kcore_edges", e0).localCheckpoint()
-    _KCORE_EDGES_MEMO[key] = out
-    return out
+    return audit_plan("kcore_edges", e0).localCheckpoint()
 
 
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -31,6 +31,7 @@ from pyspark.sql.window import Window as W
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import driver_rows_df, fan_out_small, load_table, register_table_view
+from ..staging import staged
 
 EMB_DIM = 64
 K_CLUSTERS = 8       # seeds = vec_id 0..7
@@ -670,37 +671,18 @@ def _update(assigned: DataFrame) -> DataFrame:
 # probes. Before round 7 each consumer re-read the parquet and re-ran the
 # quantization transform — the staging tier paid that scan ~10x (VERDICT
 # r6 item 7). Materialize once per (application, sf_dir), same pattern as
-# similarity._CELL_ASSIGN_MEMO: at 100 TB this is the "quantize once,
+# similarity.kmeans_cell_assignment: at 100 TB this is the "quantize once,
 # persist the fixed-point copy, train everything against it" step every
 # vector pipeline runs.
-_QVEC_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+@staged
 def quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, qe) — the fixed-point embedding relation k-means runs on;
     materialized once per (application, sf_dir) via localCheckpoint."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _QVEC_MEMO.get(key)
-    if memo is not None:
-        return memo
     emb = load_table(spark, sf_dir, "embeddings")
     out = emb.select(
         "vec_id", F.expr(_quant_sql(dl.SPARK, "embedding")).alias("qe")
     )
-    out = audit_plan("quantized_vectors", out).localCheckpoint()
-    _QVEC_MEMO[key] = out
-    return out
-
-
-# Trained k-means / PQ codebooks are deterministic functions of sf_dir
-# (exact fixed-point arithmetic — see module docstring), and they are tiny
-# driver state (K*D = 512 BIGINTs). Memoize the trained ROWS per sf_dir so
-# the query pairs that share a codebook (ml_kmeans_embeddings +
-# sim_ivf_kmeans_ann + sim_ivf_ann; ml_pq_codebook + sim_pq_adc_ann) train
-# once per process instead of re-running the Lloyd rounds each. Plain
-# Python rows, not DataFrames: safe across SparkSessions.
-_KMEANS_CENT_MEMO: dict[tuple[str, int], list[tuple[int, list[int]]]] = {}
-_PQ_CENT_MEMO: dict[str, list[tuple[int, int, list[int]]]] = {}
+    return audit_plan("quantized_vectors", out).localCheckpoint()
 
 
 # THE density-sizing rule, in one place (round 11, VERDICT r10 item 2):
@@ -735,11 +717,18 @@ def _kmeans_round_label(k: int) -> str:
     )
 
 
+# Trained k-means / PQ codebooks are deterministic functions of the fixture
+# (exact fixed-point arithmetic — see module docstring), and they are tiny
+# driver state (K*D = 512 BIGINTs). The trained ROWS are staged so the
+# query pairs that share a codebook (ml_kmeans_embeddings +
+# sim_ivf_kmeans_ann + sim_ivf_ann; ml_pq_codebook + sim_pq_adc_ann) train
+# once per application instead of re-running the Lloyd rounds each; the
+# DataFrame faces rebuild a 1-partition relation from the rows.
 def kmeans_centroids(
     spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
 ) -> DataFrame:
     """Trained centroid relation (cluster, c) after KMEANS_ITERS Lloyd
-    rounds; training memoized per (sf_dir, k) (deterministic fixed-point).
+    rounds; training staged per (application, sf_dir, k).
     ``k`` defaults to the gate constant; density-scaled callers pass
     ``k_for_corpus(N)`` (same seeds rule: vec_id < k)."""
     return driver_rows_df(
@@ -747,36 +736,34 @@ def kmeans_centroids(
     )
 
 
+@staged
 def kmeans_centroid_rows(
     spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
 ) -> "list[tuple[int, list[int]]]":
-    """Trained centroids as driver rows (training memoized per (sf_dir, k))."""
-    rows = _KMEANS_CENT_MEMO.get((sf_dir, k))
-    if rows is None:
-        q = quantized_vectors(spark, sf_dir)
-        # Centroids are DRIVER state (K*D BIGINTs), exactly as MLlib
-        # treats them: collect the K seed/updated rows and bake them into the
-        # next round's literal assignment expression. This truncates lineage
-        # with no checkpoint blocks AND makes every assignment pass map-side
-        # (centroid_argmin_sql). The collects are the scalar-aggregate kind
-        # the plan-hygiene policy allows (K rows, not data).
-        # sorted(): collect order of a multi-partition agg/filter is
-        # partition-layout-dependent; centroid VALUES are order-invariant
-        # (ties break by (d2, cl) in both faces), so canonicalize so the
-        # returned driver rows are deterministic at any partitioning (r14)
-        rows = sorted(
-            (int(r.vec_id), [int(v) for v in r.qe])
-            for r in q.filter(F.col("vec_id") < k).collect()
+    """Trained centroids as driver rows (training staged per k)."""
+    q = quantized_vectors(spark, sf_dir)
+    # Centroids are DRIVER state (K*D BIGINTs), exactly as MLlib
+    # treats them: collect the K seed/updated rows and bake them into the
+    # next round's literal assignment expression. This truncates lineage
+    # with no checkpoint blocks AND makes every assignment pass map-side
+    # (centroid_argmin_sql). The collects are the scalar-aggregate kind
+    # the plan-hygiene policy allows (K rows, not data).
+    # sorted(): collect order of a multi-partition agg/filter is
+    # partition-layout-dependent; centroid VALUES are order-invariant
+    # (ties break by (d2, cl) in both faces), so canonicalize so the
+    # returned driver rows are deterministic at any partitioning (r14)
+    rows = sorted(
+        (int(r.vec_id), [int(v) for v in r.qe])
+        for r in q.filter(F.col("vec_id") < k).collect()
+    )
+    for _ in range(KMEANS_ITERS):
+        assigned = nearest_centroid(q, rows, ["vec_id"], carry=["qe"]).select(
+            F.col("m.cl").alias("cluster"), "qe"
         )
-        for _ in range(KMEANS_ITERS):
-            assigned = nearest_centroid(q, rows, ["vec_id"], carry=["qe"]).select(
-                F.col("m.cl").alias("cluster"), "qe"
-            )
-            collected = audit_plan(
-                _kmeans_round_label(len(rows)), _update(assigned)
-            ).collect()
-            rows = sorted((int(r.cluster), [int(v) for v in r.c]) for r in collected)
-        _KMEANS_CENT_MEMO[(sf_dir, k)] = rows
+        collected = audit_plan(
+            _kmeans_round_label(len(rows)), _update(assigned)
+        ).collect()
+        rows = sorted((int(r.cluster), [int(v) for v in r.c]) for r in collected)
     return rows
 
 
@@ -843,20 +830,14 @@ def _oracle_kmeans() -> str:
     )
 
 
-# Two-level plan (super_rows, group_rows) per sf_dir — deterministic
-# fixed-point training over the (memoized) level-1 centroids; tiny driver
-# state (S + K rows), same memo discipline as _KMEANS_CENT_MEMO.
-_TWO_LEVEL_MEMO: dict[str, tuple[list, list]] = {}
-
-
+# Two-level plan (super_rows, group_rows) — deterministic fixed-point
+# training over the (staged) level-1 centroids; tiny driver state (S + K
+# rows), staged like kmeans_centroid_rows.
+@staged
 def two_level_plan_for(spark: SparkSession, sf_dir: str) -> "tuple[list, list]":
     """The sf-table-trained two-level plan (super_rows, group_rows) over
-    the gate k-means centroids, memoized per sf_dir."""
-    plan = _TWO_LEVEL_MEMO.get(sf_dir)
-    if plan is None:
-        plan = two_level_rows(spark, kmeans_centroid_rows(spark, sf_dir))
-        _TWO_LEVEL_MEMO[sf_dir] = plan
-    return plan
+    the gate k-means centroids."""
+    return two_level_rows(spark, kmeans_centroid_rows(spark, sf_dir))
 
 
 def ml_kmeans_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1097,34 +1078,14 @@ def ml_pq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pq_trained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(blocks, trained codebook) after PQ_ITERS Lloyd rounds — shared by
     the codebook summary query and the ADC search query. Training is
-    memoized per sf_dir (same contract as kmeans_centroids: the codebook
-    is deterministic, tiny driver state)."""
-    blocks = _pq_blocks(quantized_vectors(spark, sf_dir))
-    rows = _PQ_CENT_MEMO.get(sf_dir)
-    if rows is None:
-        # training re-reads blocks PQ_ITERS+1 times (each round's assign
-        # + the caller's final assign): materialize the explode once
-        # (multi-consumer staging rule; the checkpointed base is the
-        # memoized quantized_vectors, so this only pins the 8x slice
-        # fan-out, not another scan). Lazy (r14): round 1's collect is the
-        # first action and materializes it — no separate checkpoint job.
-        blocks = audit_plan("pq_blocks", blocks).localCheckpoint(eager=False)
-        # seeds: vectors 0..PQ_K-1 provide the initial codeword per block
-        cent = blocks.filter(F.col("vec_id") < PQ_K).select(
-            "block", F.col("vec_id").cast("int").alias("code"), F.col("sub").alias("c")
-        )
-        for _ in range(PQ_ITERS):
-            collected = audit_plan(
-                "pq_update_round", _pq_update(_pq_assign(blocks, cent))
-            ).collect()
-            # canonical (block, code) order — collect order is
-            # partition-layout-dependent, values are not (r14)
-            rows = sorted(
-                (int(r.block), int(r.code), [int(v) for v in r.c]) for r in collected
-            )
-            cent = driver_rows_df(spark, rows, "block int, code int, c array<bigint>")
-        _PQ_CENT_MEMO[sf_dir] = rows
-    return blocks, driver_rows_df(spark, rows, "block int, code int, c array<bigint>")
+    staged in pq_codebook_rows (same contract as kmeans_centroids: the
+    codebook is deterministic, tiny driver state)."""
+    return (
+        _pq_blocks(quantized_vectors(spark, sf_dir)),
+        driver_rows_df(
+            spark, pq_codebook_rows(spark, sf_dir), "block int, code int, c array<bigint>"
+        ),
+    )
 
 
 # A DEAD codeword (cluster emptied during training) must never win the
@@ -1568,11 +1529,34 @@ def train_pq_rows_from(vecs: DataFrame) -> "list[tuple[int, int, list[int]]]":
     return rows
 
 
+@staged
 def pq_codebook_rows(spark: SparkSession, sf_dir: str) -> "list[tuple[int, int, list[int]]]":
-    """The sf-table-trained PQ codebook as driver rows (memo-backed via
-    pq_trained) — the generation-1 model of the maintained IVF-PQ index."""
-    pq_trained(spark, sf_dir)
-    return _PQ_CENT_MEMO[sf_dir]
+    """The sf-table-trained PQ codebook as driver rows after PQ_ITERS
+    Lloyd rounds — read by pq_trained and as the generation-1 model of
+    the maintained IVF-PQ index."""
+    # training re-reads blocks once per round: materialize the explode
+    # once (multi-consumer staging rule; the checkpointed base is the
+    # staged quantized_vectors, so this only pins the 8x slice fan-out,
+    # not another scan). Lazy (r14): round 1's collect is the first
+    # action and materializes it — no separate checkpoint job.
+    blocks = audit_plan(
+        "pq_blocks", _pq_blocks(quantized_vectors(spark, sf_dir))
+    ).localCheckpoint(eager=False)
+    # seeds: vectors 0..PQ_K-1 provide the initial codeword per block
+    cent = blocks.filter(F.col("vec_id") < PQ_K).select(
+        "block", F.col("vec_id").cast("int").alias("code"), F.col("sub").alias("c")
+    )
+    for _ in range(PQ_ITERS):
+        collected = audit_plan(
+            "pq_update_round", _pq_update(_pq_assign(blocks, cent))
+        ).collect()
+        # canonical (block, code) order — collect order is
+        # partition-layout-dependent, values are not (r14)
+        rows = sorted(
+            (int(r.block), int(r.code), [int(v) for v in r.c]) for r in collected
+        )
+        cent = driver_rows_df(spark, rows, "block int, code int, c array<bigint>")
+    return rows
 
 
 def pq_oracle_ctes() -> tuple[str, str, str]:

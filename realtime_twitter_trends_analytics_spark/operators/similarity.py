@@ -25,6 +25,7 @@ from pyspark.sql.window import Window as W
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import driver_rows_df, fan_out_small, load_table
+from ..staging import staged
 
 N_QUERY_VECS = 10   # vec_id < 10 are the query set
 TOP_K = 10
@@ -699,13 +700,10 @@ SEMDEDUP_THRESHOLD = 0.3
 # The k-means cell ASSIGNMENT relation (vec_id, label, embedding, norm,
 # cell) is the shared staging input of every learned-codebook query:
 # dedup_semantic_cells, sim_ivf_kmeans_ann, sim_knn_label_probe_ivf. Same
-# materialize-once pattern as dedup._PAIRS_MEMO (one localCheckpoint per
-# (application, sf_dir), distributed) — at 100 TB this IS the IVF index
-# build: assign once, write (cell -> inverted list) to storage, point
-# search AND SemDeDup at it.
-_CELL_ASSIGN_MEMO: dict[tuple[str, str, int | None, str | None], DataFrame] = {}
-
-
+# materialize-once pattern as dedup.dedup_minhash_pairs (one staged
+# localCheckpoint per (application, sf_dir), distributed) — at 100 TB this
+# IS the IVF index build: assign once, write (cell -> inverted list) to
+# storage, point search AND SemDeDup at it.
 def kmeans_cell_assignment(
     spark: SparkSession, sf_dir: str, k: int | None = None,
     force: "str | None" = None,
@@ -720,31 +718,25 @@ def kmeans_cell_assignment(
     ``force="relation"`` pins the join face below the ceiling — the
     oracle-gated dedup_semantic_cells_rel twin runs it so the relation
     face is VALUE-oracled, not just pytest-pinned."""
-    from .ml import (
-        K_CLUSTERS,
-        _literal_ceiling,
-        _quant_sql,
-        kmeans_centroid_rows,
-        nearest_centroid,
-    )
+    from .ml import K_CLUSTERS
 
     # k=None trains at the gate constant, so it produces the IDENTICAL
-    # assignment as an explicit k=K_CLUSTERS — normalize the memo key or
+    # assignment as an explicit k=K_CLUSTERS — normalize the staging key or
     # the _prod twins at bench SF (k_for_corpus -> K_CLUSTERS) would
     # re-materialize a duplicate eager staging table of the same relation
-    key = (
-        spark.sparkContext.applicationId, sf_dir,
-        K_CLUSTERS if k is None else k, force,
+    return _kmeans_cell_assignment(
+        spark, sf_dir, K_CLUSTERS if k is None else k, force
     )
-    memo = _CELL_ASSIGN_MEMO.get(key)
-    if memo is not None:
-        return memo
+
+
+@staged
+def _kmeans_cell_assignment(
+    spark: SparkSession, sf_dir: str, k: int, force: "str | None"
+) -> DataFrame:
+    from .ml import _literal_ceiling, _quant_sql, kmeans_centroid_rows, nearest_centroid
+
     emb = load_table(spark, sf_dir, "embeddings")
-    rows = (
-        kmeans_centroid_rows(spark, sf_dir)
-        if k is None
-        else kmeans_centroid_rows(spark, sf_dir, k)
-    )
+    rows = kmeans_centroid_rows(spark, sf_dir, k)
     out = nearest_centroid(
         emb, rows, ["vec_id"],
         qe_expr=_quant_sql(dl.SPARK, "embedding"),
@@ -764,9 +756,7 @@ def kmeans_cell_assignment(
         if force == "relation" or len(rows) > _literal_ceiling()
         else "semantic_cell_assignments"
     )
-    out = audit_plan(label, out).localCheckpoint()
-    _CELL_ASSIGN_MEMO[key] = out
-    return out
+    return audit_plan(label, out).localCheckpoint()
 
 
 def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..audit import audit_plan
 from ..functions import dialect as dl
 from ..sources.loaders import driver_rows_df, fan_out_small, load_table
+from ..staging import staged
 
 # Marker-token sets for the deterministic n-gram-ish language heuristic.
 # (The driver corpus is a synthetic shared-vocab word salad, so the heuristic
@@ -201,37 +202,21 @@ FROM documents
 """
 
 
-# The corpus bigram-instance relation (doc_id, source, bigram, w1) is the
-# shared staging input of three registered queries: textstats_bigrams,
-# textstats_lm_score, and graph_pagerank_topk's transition graph. Same
-# materialize-once pattern as dedup's _PAIRS_MEMO: one localCheckpoint per
-# (application, sf_dir), distributed, never collected — the 100 TB
-# equivalent is a parquet n-gram staging table every scorer reads.
-_BIGRAM_MEMO: dict[tuple[str, str], DataFrame] = {}
-
 # Corpus vocabulary size |V| — deterministic model state (one BIGINT per
 # application x fixture, the add-one-smoothing denominator both bigram-LM
-# scorers embed as a literal). Memoized in the same tier as the kmeans/PQ
-# codebooks and _BPE_MERGES_MEMO, cleared by registry.clear_staging_memos;
-# without the memo every lm_score/ccnet execution re-ran the full
+# scorers embed as a literal). Staged like the kmeans/PQ codebooks and the
+# BPE merges; without it every lm_score/ccnet execution re-ran the full
 # distinct-token scan for a scalar that cannot change within a process.
-_VOCAB_MEMO: dict[tuple[str, str], int] = {}
-
-
+@staged
 def _corpus_vocab(spark: SparkSession, sf_dir: str) -> int:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    v = _VOCAB_MEMO.get(key)
-    if v is None:
-        from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_narrow
 
-        v = int(
-            tokenized_docs_narrow(spark, sf_dir)
-            .select(F.explode("toks").alias("t"))
-            .agg(F.count_distinct("t").alias("v"))
-            .collect()[0]["v"]
-        )
-        _VOCAB_MEMO[key] = v
-    return v
+    return int(
+        tokenized_docs_narrow(spark, sf_dir)
+        .select(F.explode("toks").alias("t"))
+        .agg(F.count_distinct("t").alias("v"))
+        .collect()[0]["v"]
+    )
 
 
 def corpus_vocab_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -249,17 +234,21 @@ def corpus_vocab_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.range(1).select(F.lit(v).alias("vocab"))
 
 
+# The corpus bigram-instance relation (doc_id, source, bigram, w1) is the
+# shared staging input of three registered queries: textstats_bigrams,
+# textstats_lm_score, and graph_pagerank_topk's transition graph. Same
+# materialize-once pattern as dedup's pair relation: one staged
+# localCheckpoint per (application, sf_dir), distributed, never collected —
+# the 100 TB equivalent is a parquet n-gram staging table every scorer
+# reads.
+@staged
 def bigram_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, bigram, w1) — one row per corpus bigram instance,
     materialized once per (application, sf_dir). The explode is map-side;
     consumers aggregate on uniform bigram/w1/source keys. Reads the shared
     tokenized-docs staging relation (r8) instead of re-tokenizing."""
-    from .dedup import shingles_sql, tokenized_docs_staging  # shared templates
+    from .dedup import narrow_token_read, shingles_sql, tokenized_docs_staging
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _BIGRAM_MEMO.get(key)
-    if memo is not None:
-        return memo
     out = (
         tokenized_docs_staging(spark, sf_dir)
         .select(
@@ -273,10 +262,8 @@ def bigram_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: the checkpoint BUILDS wide (the explode wants the fan-out) but
     # every consumer is a bounded agg/join over bigram instances — narrow
     # the read side when the underlying corpus was local-small-fanned
-    # (see dedup.tokenized_docs_narrow; identity at scale)
-    out = _narrow_token_read(spark, sf_dir, out)
-    _BIGRAM_MEMO[key] = out
-    return out
+    # (see dedup.narrow_token_read; identity at scale)
+    return narrow_token_read(spark, sf_dir, out)
 
 
 def textstats_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -958,21 +945,6 @@ LIMIT {BPE_TOP_MERGES}
 BPE_INDUCT_ROUNDS = 32
 
 
-_TOKEN_AGG_FAN_IN = 4  # read partitions for LIGHT aggs over the fanned ckpt
-
-
-def _narrow_token_read(spark: SparkSession, sf_dir: str, toks: DataFrame) -> DataFrame:
-    """Consumer-side fan-in for LIGHT token-grain aggregations over a
-    FANNED staging checkpoint (r15, VERDICT r14 item 4) — see
-    dedup.tokenized_docs_narrow for the rule; this form takes the
-    relation explicitly so bigram-derived inputs can narrow too."""
-    from .dedup import tokenized_docs_fanned
-
-    if tokenized_docs_fanned(spark, sf_dir):
-        return toks.coalesce(_TOKEN_AGG_FAN_IN)
-    return toks
-
-
 def _pair_structs_of(col: str) -> str:
     """Adjacent symbol pairs of an array column as (a, b) structs — the
     shared template of both trainer faces' pair counts and the r15 fused
@@ -1474,21 +1446,14 @@ def _oracle_bpe_induction() -> str:
 
 
 # The learned merge table is MODEL state (a handful of driver rows) shared
-# by the apply/fertility readout — memoized per (application, sf_dir) like
+# by the apply/fertility readout — staged per (application, sf_dir) like
 # the kmeans codebook, so consumers price application, not re-training.
-_BPE_MERGES_MEMO: dict[tuple[str, str], list] = {}
-
-
+@staged
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _BPE_MERGES_MEMO.get(key)
-    if memo is None:
-        memo = [
-            (r["sym_a"], r["sym_b"])
-            for r in textstats_bpe_induction(spark, sf_dir).collect()
-        ]
-        _BPE_MERGES_MEMO[key] = memo
-    return memo
+    return [
+        (r["sym_a"], r["sym_b"])
+        for r in textstats_bpe_induction(spark, sf_dir).collect()
+    ]
 
 
 def textstats_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2406,10 +2371,10 @@ def docs_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) hash agg; the corpus token marginal is a
     vocabulary-grain re-agg; per-source totals ride a broadcast
     source-grain join and the corpus total a 1-row broadcast."""
-    from .dedup import tokenized_docs_staging  # shared tokenize-once staging
+    from .dedup import tokenized_docs_narrow  # shared tokenize-once staging
 
     cells = (
-        _narrow_token_read(spark, sf_dir, tokenized_docs_staging(spark, sf_dir))
+        tokenized_docs_narrow(spark, sf_dir)
         .select("source", F.explode("toks").alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c_sw"))
@@ -2498,10 +2463,10 @@ def docs_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) hash agg, then a source-grain re-agg —
     per-source vocabulary bounded, nothing data-sized after the first
     agg."""
-    from .dedup import tokenized_docs_staging  # shared tokenize-once staging
+    from .dedup import tokenized_docs_narrow  # shared tokenize-once staging
 
     cells = (
-        _narrow_token_read(spark, sf_dir, tokenized_docs_staging(spark, sf_dir))
+        tokenized_docs_narrow(spark, sf_dir)
         .select("source", F.explode("toks").alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))

@@ -32,6 +32,9 @@ from .operators import (
     textstats,
     trends,
 )
+# bench.py and tools/ drop the staging tier between timed builds (min-of-N
+# build times) through this name.
+from .staging import clear as clear_staging_memos  # noqa: F401
 
 _MODULES = [
     relational,
@@ -68,7 +71,7 @@ def all_queries() -> dict[str, QueryFn]:
 
 
 def all_staging() -> dict[str, QueryFn]:
-    """Named staging-relation builders (memoized per application/sf_dir —
+    """Named staging-relation builders (staged per application/sf_dir —
     the in-process analogue of a pipeline's parquet staging writes).
 
     bench.py builds these FIRST and records each build as its own
@@ -165,40 +168,6 @@ def all_bench_only() -> dict[str, QueryFn]:
         "textstats_bpe_induction_prod": textstats.textstats_bpe_induction_prod,
         "textstats_bpe_induction_batched": textstats.textstats_bpe_induction_batched,
     }
-
-
-def clear_staging_memos() -> None:
-    """Drop every staging-relation memo (and the driver-state model memos
-    they feed) so bench.py can rebuild the staging tier and record
-    MIN-of-N build times. Same-tree staging drift was the largest
-    un-damped noise channel in round-over-round diffs (r7->r8 probe:
-    unchanged cooc_edges/pq_codebook lines re-measured 1.23x/1.37x on the
-    same box) — query lines already damp with min-of-2 timed runs, but a
-    memoized build only ever ran once per process. Safe to call between
-    builds: every builder is deterministic and idempotent, and consumers
-    only hold references through the memo."""
-    from .operators import cleaning, dedup, graph, ml, similarity, textstats
-
-    for memo in (
-        dedup._TOKD_MEMO,
-        dedup._SH_ALL_MEMO,
-        dedup._CAPPED_SH_MEMO,
-        dedup._SIG_MEMO,
-        dedup._PAIRS_MEMO,
-        graph._COOC_MEMO,
-        graph._KCORE_EDGES_MEMO,
-        ml._QVEC_MEMO,
-        ml._KMEANS_CENT_MEMO,
-        ml._PQ_CENT_MEMO,
-        ml._TWO_LEVEL_MEMO,
-        similarity._CELL_ASSIGN_MEMO,
-        textstats._BIGRAM_MEMO,
-        textstats._BPE_MERGES_MEMO,
-        textstats._VOCAB_MEMO,
-        cleaning._DSIR_INST_MEMO,
-        cleaning._DSIR_PERDOC_MEMO,
-    ):
-        memo.clear()
 
 
 def all_oracles() -> dict[str, str]:

@@ -136,8 +136,6 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     relations are K/grid/value-domain-bounded BY CONSTRUCTION (the repo's
     model-state discipline), so one partition is the right physical shape
     at any corpus scale; values and schema are unchanged."""
-    if not rows:
-        return spark.createDataFrame([], schema)
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
 
 

@@ -57,7 +57,7 @@ def sentiment_score_udf(texts: pd.Series) -> pd.Series:
     pipeline per record, proc:144). r15: batches go through the VECTORIZED
     scorer (§4.2 — C-speed explode/groupby kernels instead of the per-row
     Python loop; bit-identical scores, pinned by the vec-vs-reference
-    suite in tests/test_text_functions.py)."""
+    suite in tests/test_sentiment.py)."""
     return pd.Series(score_texts_pandas_vec(texts), dtype="float64")
 
 

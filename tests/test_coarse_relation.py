@@ -37,6 +37,7 @@ from realtime_twitter_trends_analytics_spark.operators.ml import (
     nearest_centroids_topn,
     quantized_vectors,
 )
+from realtime_twitter_trends_analytics_spark.registry import clear_staging_memos
 
 SF = "/root/testdata/sf0.001"
 
@@ -234,13 +235,13 @@ def test_kmeans_relation_round_audit_label(spark, monkeypatch):
     from tests.test_plan_hygiene import AUDIT_CARTESIAN_OK
 
     assert "kmeans_update_round_rel" in AUDIT_CARTESIAN_OK
-    _clear_coarse_memos()
+    clear_staging_memos()
     try:
         monkeypatch.setattr(ml, "K_LITERAL_CEILING", 4)
         kmeans_centroid_rows(spark, SF)
     finally:
         monkeypatch.undo()
-        _clear_coarse_memos()
+        clear_staging_memos()
     plans = audit_plans()
     assert "kmeans_update_round_rel" in plans
     # the literal label, if captured in this process, must be clean
@@ -251,11 +252,6 @@ def test_kmeans_relation_round_audit_label(spark, monkeypatch):
 
 
 # ----------------------------- the REAL prod faces through the dispatch
-
-
-def _clear_coarse_memos():
-    ml._KMEANS_CENT_MEMO.clear()
-    sim._CELL_ASSIGN_MEMO.clear()
 
 
 @pytest.mark.parametrize(
@@ -272,13 +268,13 @@ def test_prod_faces_run_past_lowered_ceiling(spark, monkeypatch, query):
     real 4096 wall."""
     fn = getattr(sim, query)
     want = _rows_of(fn(spark, SF))  # literal face (gate K, memoized)
-    _clear_coarse_memos()
+    clear_staging_memos()
     try:
         monkeypatch.setattr(ml, "K_LITERAL_CEILING", 4)
         got = _rows_of(fn(spark, SF))
     finally:
         monkeypatch.undo()
-        _clear_coarse_memos()  # do not leak relation-built memos to other tests
+        clear_staging_memos()  # do not leak relation-built memos to other tests
     assert got == want
 
 

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import math
 
-from realtime_twitter_trends_analytics_spark.operators import textstats
+from realtime_twitter_trends_analytics_spark import staging
 from realtime_twitter_trends_analytics_spark.operators.textstats import (
     _corpus_vocab,
     textstats_lm_score,
@@ -40,12 +40,12 @@ def test_corpus_vocab_memo(spark, sf_dir, duck):
         "(SELECT unnest(string_split(text,' ')) AS t FROM documents)"
     ).fetchone()[0]
     assert v1 == expected
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert textstats._VOCAB_MEMO[key] == v1
+    key = _corpus_vocab.key(spark, sf_dir)
+    assert staging._ENTRIES[key] == v1
     # memo hit: poison the stored value and confirm the call returns it
     # (i.e. no recompute happens on the second call)
-    textstats._VOCAB_MEMO[key] = v1 + 1
+    staging._ENTRIES[key] = v1 + 1
     assert _corpus_vocab(spark, sf_dir) == v1 + 1
     clear_staging_memos()
-    assert key not in textstats._VOCAB_MEMO
+    assert key not in staging._ENTRIES
     assert _corpus_vocab(spark, sf_dir) == v1

@@ -256,7 +256,11 @@ def main() -> int:
     # bench.py), then forget the pair-staging memo so every measured scale
     # pays its own build: pairs = the staging build, clusters = a staging
     # consumer — the same split the bench records.
+    from realtime_twitter_trends_analytics_spark import staging
     from realtime_twitter_trends_analytics_spark.operators import dedup as _dedup
+
+    def forget_pairs():
+        staging.clear(_dedup.dedup_minhash_pairs, _dedup.minhash_signatures_staging)
 
     warm_dir = build_scale(spark, args.scales[0])
     for fn in (dedup_minhash_pairs, dedup_clusters, sim_lsh_ann,
@@ -268,8 +272,7 @@ def main() -> int:
                ml_stump_cv_gain, ml_feature_hashing):
         fn(spark, warm_dir).count()
         spark.catalog.clearCache()
-    _dedup._PAIRS_MEMO.clear()
-    _dedup._SIG_MEMO.clear()
+    forget_pairs()
 
     results = []
     for k in args.scales:
@@ -316,8 +319,7 @@ def main() -> int:
             dt, sb, n = None, None, None
             for attempt in range(3):
                 if name in ("dedup_minhash_pairs", "dedup_incremental_probe"):
-                    _dedup._PAIRS_MEMO.clear()  # re-pay the staging build
-                    _dedup._SIG_MEMO.clear()
+                    forget_pairs()  # re-pay the staging build
                 spark.catalog.clearCache()
                 _gc.collect()
                 spark.sparkContext._jvm.System.gc()
