@@ -397,8 +397,11 @@ def orders_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # scan predicates to one grouping key. Two scans, one data-sized
     # shuffle pair, one matrix-grain agg; the base/increment/merge
     # structure (and the oracle's full-recompute proof) is unchanged.
-    o2 = o.withColumn("do_", (F.col("od") >= split))
-    li2 = li.withColumn("dl_", (F.col("sd") >= split))
+    # A null date is not past the split: the row belongs to the base side,
+    # so each row lands in exactly one cell (a three-valued flag would
+    # drop it from both filters below).
+    o2 = o.withColumn("do_", F.coalesce(F.col("od") >= split, F.lit(False)))
+    li2 = li.withColumn("dl_", F.coalesce(F.col("sd") >= split, F.lit(False)))
     cells = (
         o2.join(li2, o2.o_orderkey == li2.l_orderkey)
         .groupBy("o_orderpriority", "om", "do_", "dl_")
@@ -407,22 +410,31 @@ def orders_join_ivm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # base + inc read it once each; audited (the r5 blind-spot rule for
     # checkpoint-hidden subplans)
     cells = audit_plan("ivm_cells", cells).localCheckpoint(eager=False)
+    # The merge is null-safe on the month: a null om is keyed as
+    # (omk = epoch, omn = true), which the plain equi-join matches. Both
+    # sides group by the same keys, so the join needs no extra exchange
+    # (an eqNullSafe condition would re-shuffle both on coalesce/isnull).
+    view_key = [
+        "o_orderpriority",
+        F.coalesce("om", F.expr("DATE '1970-01-01'")).alias("omk"),
+        F.isnull("om").alias("omn"),
+    ]
     base = (
         cells.filter(~F.col("do_") & ~F.col("dl_"))
-        .groupBy("o_orderpriority", "om")
+        .groupBy(*view_key)
         .agg(F.sum("n").alias("bn"), F.sum("c").alias("bc"))
     )
     inc = (
         cells.filter(F.col("do_") | F.col("dl_"))
-        .groupBy("o_orderpriority", "om")
+        .groupBy(*view_key)
         .agg(F.sum("n").alias("dn"), F.sum("c").alias("dc"))
     )
     zero = F.lit(0).cast("bigint")
     return (
-        base.join(inc, ["o_orderpriority", "om"], "full_outer")
+        base.join(inc, ["o_orderpriority", "omk", "omn"], "full_outer")
         .select(
             F.col("o_orderpriority").alias("pr"),
-            "om",
+            F.when(~F.col("omn"), F.col("omk")).alias("om"),
             (F.coalesce("bn", zero) + F.coalesce("dn", zero)).alias("n_items"),
             (F.coalesce("bc", zero) + F.coalesce("dc", zero)).alias("rev_cents"),
         )

@@ -16,7 +16,8 @@ onto Structured Streaming:
 - Mongo/MySQL sinks with first-batch drop (proc:104-125, 259-291)
   -> ``foreachBatch`` with ``batch_id == 0`` setup + idempotent appends
 - checkpoint dir (proc:72) -> ``checkpointLocation`` (offsets + state +
-  sink commit log in one mechanism)
+  sink commit log in one mechanism); ``session.get_spark()`` writes local
+  checkpoints through the FileSystem-based manager (temp file + rename).
 
 Scale notes: watermarks bound all state (the reference's checkpointed window
 RDDs grow without one); sentiment is a batched Arrow pandas_udf with the

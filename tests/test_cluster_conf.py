@@ -92,3 +92,20 @@ def test_profile_runtime_subset_engages(spark, sf_dir):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+_CKPT_MANAGER_KEY = "spark.sql.streaming.checkpointFileManagerClass"
+
+
+def test_local_checkpoints_use_filesystem_manager(spark, tmp_path):
+    """get_spark() checkpoints through the FileSystem manager (temp write +
+    rename, no forked readlink/chmod per status call); the cluster profile
+    leaves the key unset so HDFS keeps Spark's FileContext default."""
+    jvm = spark._jvm
+    path = jvm.org.apache.hadoop.fs.Path(f"file:{tmp_path}")
+    hadoop_conf = spark._jsparkSession.sessionState().newHadoopConf()
+    checkpointing = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    manager = checkpointing.CheckpointFileManager.create(path, hadoop_conf)
+    assert manager.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+    assert _CKPT_MANAGER_KEY not in cluster_conf()
+    assert _CKPT_MANAGER_KEY not in RUNTIME_CONFS

@@ -140,3 +140,72 @@ def test_asof_snapshot_one_row_per_customer(spark, sf_dir):
         | (F.col("effective_to") < F.lit(SCD_AS_OF).cast("date"))
     ).count()
     assert bad == 0
+
+
+def test_join_ivm_null_dates_match_one_join_recompute(spark, tmp_path):
+    """orders_join_ivm with a null o_orderdate and a null l_shipdate equals
+    the oracle's one-join recompute. Order 3's null month has lineitems on
+    both sides of the split, so the null month reaches the base AND the
+    increment and must merge into one row; the null ship date (order 4)
+    must stay in the base. TPC-H dates are never null, so the sf fixtures
+    cannot catch either case."""
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from realtime_twitter_trends_analytics_spark.operators.layout import (
+        _oracle_join_ivm,
+        orders_join_ivm,
+    )
+    from realtime_twitter_trends_analytics_spark.plans.explain import count_exchanges
+
+    d = datetime.datetime
+    ts = pa.timestamp("us")
+    orders = pa.table(
+        {
+            "o_orderkey": pa.array([1, 2, 3, 4], pa.int64()),
+            "o_orderpriority": ["1-URGENT", "1-URGENT", "2-HIGH", "2-HIGH"],
+            "o_orderdate": pa.array(
+                [d(1995, 3, 15), d(1998, 2, 1), None, d(1996, 6, 30)], ts
+            ),
+        }
+    )
+    lineitem = pa.table(
+        {
+            "l_orderkey": pa.array([1, 1, 2, 2, 3, 3, 4], pa.int64()),
+            "l_extendedprice": [100.25, 10.0, 5.5, 7.0, 3.0, 4.0, 1.0],
+            "l_shipdate": pa.array(
+                [
+                    d(1995, 4, 1),
+                    d(1997, 2, 1),
+                    d(1998, 2, 10),
+                    None,
+                    d(1995, 1, 1),
+                    d(1998, 1, 1),
+                    None,
+                ],
+                ts,
+            ),
+        }
+    )
+    pq.write_table(orders, tmp_path / "orders.parquet")
+    pq.write_table(lineitem, tmp_path / "lineitem.parquet")
+
+    con = duckdb.connect()
+    for t in ("orders", "lineitem"):
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{tmp_path}/{t}.parquet')"
+        )
+    want = con.execute(_oracle_join_ivm()).fetchall()
+    con.close()
+    view = orders_join_ivm(spark, str(tmp_path))
+    # the null-safe merge reuses the aggregates' partitioning (an
+    # eqNullSafe join condition plans two more exchanges)
+    assert count_exchanges(view) <= 3
+    got = [tuple(r) for r in view.collect()]
+
+    def key(row):
+        return (row[0], row[1] is None, row[1] or datetime.date.min)
+
+    assert sorted(got, key=key) == sorted(want, key=key)
+    assert any(r[1] is None for r in want), "fixture lost its null month"

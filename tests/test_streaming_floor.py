@@ -30,6 +30,15 @@ rule the ANN recall floors use (enforce the envelope, record the number).
 Best-of-three per path (was two): the joined path's run-to-run spread on a
 shared VM is ~1.4x, and max-of-3 cuts the probability of every sample
 landing in the band's bottom tail while staying cheap (~15 s/path).
+
+Readings on a quiet 4-core box (2026-10), after local checkpoints moved to
+the FileSystem checkpoint manager; two warm best-of-three per path: arrow
+53.8k / 54.6k, sql 69.9k / 70.9k, joined 48.6k / 50.5k, dedup 1710 / 1949,
+corpus 1822 / 1789, ann maintain 203 / 212, ivfpq maintain 320 / 353. The
+first five sit above their paths' slowest recorded readings, so those
+derivations and floors are unchanged. The two maintained-index paths read
+near their floors on 4 cores (the tree before the manager change read the
+same) and are left as they are: floors are never lowered here.
 """
 
 from __future__ import annotations
