@@ -307,9 +307,9 @@ HEADLINE = [
     # pinned in tests/test_density_rule.py)
     "dedup_semantic_cells_prod",
     "sim_ivfpq_ann_prod",
-    # round-12: the BPE trainer production faces (merge lists pinned
-    # identical to the gate face in tests/test_bpe_prod.py)
-    "textstats_bpe_induction_prod",
+    # round-12: the distributed batched BPE trainer, the gate trainer's
+    # path above BPE_TRAIN_TYPE_CAP types (merge list pinned to the DuckDB
+    # oracle in tests/test_bpe_prod.py)
     "textstats_bpe_induction_batched",
 ]
 

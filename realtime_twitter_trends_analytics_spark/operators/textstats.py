@@ -947,7 +947,7 @@ BPE_INDUCT_ROUNDS = 32
 
 def _pair_structs_of(col: str) -> str:
     """Adjacent symbol pairs of an array column as (a, b) structs — the
-    shared template of both trainer faces' pair counts and the r15 fused
+    shared template of the batched trainer's pair counts and its r15 fused
     delta (which needs it over the FOLDED array too). Callers guard
     size >= 2: sequence(1, 0) is DESCENDING in Spark and ANSI element_at
     would throw on 1-symbol words."""
@@ -957,163 +957,7 @@ def _pair_structs_of(col: str) -> str:
     )
 
 
-def textstats_bpe_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-round BPE tokenizer induction (round 9 item 6, extended to a
-    realistic merge count in round 10): BPE_INDUCT_ROUNDS iterations of
-    [count adjacent symbol pairs over the word-frequency vocabulary ->
-    take the most frequent pair -> merge it everywhere], with the
-    vocabulary's symbol sequences UPDATED between rounds — the actual
-    Sennrich et al. training loop, not just its first step. Returns the
-    learned merge table (merge_round, sym_a, sym_b, freq).
-
-    Scale shape — SUB-LINEAR in rounds x vocab (round 10): the corpus
-    reduces once to the (word, count) type table (hash agg on a uniform
-    key) and the pair counts are built by ONE full vocabulary explode up
-    front; after that they are maintained INCREMENTALLY, exactly how
-    production BPE trainers iterate. The pair-count table is a
-    sufficient statistic of model scale — alphabet^2-bounded plus ~1 new
-    symbol per merge round (a few thousand rows) — so like the markov K^2
-    matrix it lives on the driver, and the per-round top-1 is a dict min,
-    not a Spark job. Each round's distributed work touches ONLY the
-    AFFECTED words (those containing the winning pair): their old pairs
-    enter the delta negatively, their folded pairs positively — an exact
-    integer update, bit-equal to a full recount (the DuckDB oracle IS the
-    full per-round recount, so the gate proves the equivalence). Per
-    round, TWO jobs over the checkpointed vocabulary: collect the
-    pair-count delta (affected-words-sized explode, not vocab-sized) and
-    rewrite the vocabulary with ONE conditional map-side projection
-    IF(has_pair, fold, syms) — constant partition count by construction
-    (see the in-loop comment on why not a union).
-
-    The merge applies LEFT-TO-RIGHT NON-OVERLAPPING, BPE's exact pass
-    semantics, via an array fold: append each symbol unless the
-    accumulator's last element is sym_a and the incoming symbol is sym_b,
-    in which case replace the last element with the concatenation. A
-    just-merged symbol can never re-merge as the pair's left side within
-    the same round (a||b = a requires an empty symbol), so no flag is
-    needed — [a,a,a,a,a] with pair (a,a) folds to [aa,aa,a], matching the
-    scanning definition. The DuckDB oracle runs the identical fold
-    (list_reduce over singleton lists) through chained MATERIALIZED CTEs,
-    one pair-count/best/vocab triple per round."""
-    docs = load_table(spark, sf_dir, "documents")
-    syms0 = dl.transform(
-        dl.SPARK, dl.seq(dl.SPARK, "1", "length(word)"), "i", "substr(word, i, 1)"
-    )
-    cur = (
-        docs.select(F.explode(F.expr(dl.split_ws(dl.SPARK, "text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("wc"))
-        .select(F.expr(syms0).alias("syms"), "wc")
-        # LAZY checkpoint (r14): the counts collect right below is the
-        # first consumer and computes every partition — it materializes
-        # the blocks itself, saving the standalone checkpoint job
-        .localCheckpoint(eager=False)
-    )
-    fold = (
-        "aggregate(syms, cast(array() as array<string>), (acc, x) -> "
-        "IF(size(acc) > 0 AND element_at(acc, -1) = a AND x = b, "
-        "concat(slice(acc, 1, size(acc) - 1), array(a || b)), "
-        "concat(acc, array(x))))"
-    )
-    pair_structs = _pair_structs_of("syms")
-    # CASE guard, not AND: sequence(1, 0) is the DESCENDING [1, 0] in
-    # Spark, and ANSI element_at(syms, 0) would throw for 1-symbol words
-    has_pair = (
-        "CASE WHEN size(syms) >= 2 THEN exists(sequence(1, size(syms) - 1), "
-        "i -> element_at(syms, i) = a AND element_at(syms, i + 1) = b) "
-        "ELSE false END"
-    )
-    # ---- one full explode builds the initial pair counts; from here the
-    # table is driver model state, updated by affected-word deltas only
-    counts: dict[tuple[str, str], int] = {
-        (row["a"], row["b"]): int(row["freq"])
-        for row in (
-            cur.filter(F.size("syms") >= 2)
-            .select(F.explode(F.expr(pair_structs)).alias("p"), "wc")
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("wc").alias("freq"))
-            .collect()
-        )
-    }
-    merges = []  # (round, a, b, freq) — K driver rows, the model itself
-    for r in range(1, BPE_INDUCT_ROUNDS + 1):
-        if not counts:
-            break  # vocabulary fully merged (tiny corpora)
-        # top-1 = dict min on (-freq, a, b) — same tie-break as the
-        # oracle's ORDER BY freq DESC, a ASC, b ASC; zero Spark jobs
-        (a_val, b_val), freq = min(
-            counts.items(), key=lambda kv: (-kv[1], kv[0][0], kv[0][1])
-        )
-        merges.append((r, a_val, b_val, freq))
-        if r < BPE_INDUCT_ROUNDS:
-            # inject the pair as typed literal COLUMNS (F.lit — no SQL
-            # string splicing, symbols may contain quotes); ONE select
-            # (r15: every py4j DataFrame op is a measured ~10-30ms driver
-            # round-trip on this loop's critical path)
-            tagged = cur.select(
-                "syms", "wc", F.lit(a_val).alias("a"), F.lit(b_val).alias("b")
-            )
-            # exact pair-count delta: affected words' pairs out, their
-            # folded pairs in — affected-sized explode, never vocab-sized.
-            # The fold here is re-evaluated by the cur rewrite below, but
-            # only over the (small) affected set; the alternative — a
-            # materialized folded relation unioned back in — DOUBLES the
-            # partition count every round (2^r growth: both union sides
-            # inherit cur's partitioning), which is a task-count explosion
-            # by round ~15. One conditional projection keeps partitioning
-            # constant across all rounds.
-            #
-            # r15 (driver-bound loop, §5): the delta was a TWO-branch union
-            # (old pairs at -wc, folded pairs at +wc) whose branches each
-            # re-embedded the affected-set filter subtree — per-round plan
-            # analysis was ~40% of the round's wall. Fused into ONE pass:
-            # fold once per affected word, emit both pair lists through a
-            # single weighted explode. Same (a, b, d) multiset — integer
-            # sums are order-independent — pinned by the merge-list
-            # equality suite + the oracle's full per-round recount.
-            delta = (
-                tagged.filter(F.expr(has_pair))
-                .selectExpr("wc", "syms", f"{fold} AS fsyms")
-                .selectExpr(
-                    "explode(concat("
-                    f"transform({pair_structs}, q -> "
-                    "struct(q.a AS a, q.b AS b, -wc AS d)), "
-                    "CASE WHEN size(fsyms) >= 2 THEN "
-                    f"transform({_pair_structs_of('fsyms')}, q -> "
-                    "struct(q.a AS a, q.b AS b, wc AS d)) "
-                    "ELSE array() END)) AS pd"
-                )
-                .groupBy(F.col("pd.a").alias("a"), F.col("pd.b").alias("b"))
-                .agg(F.sum("pd.d").alias("d"))
-                .filter(F.col("d") != 0)
-                .collect()
-            )
-            for row in delta:
-                k = (row["a"], row["b"])
-                nv = counts.get(k, 0) + int(row["d"])
-                if nv > 0:
-                    counts[k] = nv
-                else:
-                    counts.pop(k, None)
-            # LAZY checkpoint (r14): the NEXT round's delta collect
-            # is the first consumer and computes every partition, so it
-            # materializes the rewritten vocabulary as a side effect —
-            # ONE job per round instead of two (rewrite + delta), the
-            # sim_kcenter_select lesson applied to the 32-round loop.
-            # Lineage still truncates one round deep: each delta job
-            # leaves the round's blocks behind it.
-            cur = (
-                tagged.select(
-                    F.expr(f"IF({has_pair}, {fold}, syms)").alias("syms"), "wc"
-                )
-                .localCheckpoint(eager=False)
-            )
-    return driver_rows_df(
-        spark, merges, "merge_round int, sym_a string, sym_b string, freq bigint"
-    ).orderBy("merge_round")
-
-
-BPE_BATCH_M = 8  # max non-conflicting merges applied per scan (batched face)
+BPE_BATCH_M = 8  # max non-conflicting merges applied per scan (batched trainer)
 
 
 def textstats_bpe_induction_batched(
@@ -1121,13 +965,14 @@ def textstats_bpe_induction_batched(
 ) -> DataFrame:
     """Batched-merge DISTRIBUTED trainer (round 12, VERDICT r11 item 4):
     the standard top-m non-conflicting optimization with admission rules
-    tight enough that the learned merge list is PROVABLY EQUAL to the
-    sequential gate face — per scan, ONE delta job + ONE vocabulary
-    rewrite apply a whole batch, cutting the 32 x 2 sequential jobs (the
-    6.2 s wall at sf0.1) ~2-3x. This is the trainer shape for the regime
-    where even the word-TYPE table cannot be collected (see
-    textstats_bpe_induction_prod for the capped-collect production face
-    that wins when it can).
+    tight enough that the learned merge list is PROVABLY EQUAL to
+    sequential BPE — the merge list of textstats_bpe_induction and of the
+    DuckDB oracle's full per-round recount (_oracle_bpe_induction). Per
+    scan, ONE delta job + ONE vocabulary rewrite apply a whole batch
+    (~19 scans for 32 merges). This is the trainer for the regime where
+    the word-TYPE table is too large to collect:
+    textstats_bpe_induction runs it above BPE_TRAIN_TYPE_CAP types and
+    trains on the driver at or under it.
 
     Admission (in exact (-freq, a, b) sequential priority; PREFIX rule —
     stop at the first rejection, never skip):
@@ -1148,10 +993,12 @@ def textstats_bpe_induction_batched(
     y" removes adjacencies, never forms new ones between old symbols) and
     deferred conflicts re-ranking next scan against exact updated counts,
     the batch members are exactly the next |batch| sequential picks —
-    list equality pinned per-merge in tests/test_bpe_prod.py at every
-    test SF, not asserted from this argument alone.
+    list equality with the oracle pinned per-merge in
+    tests/test_bpe_prod.py at every test SF, not asserted from this
+    argument alone.
 
-    Same return schema as the gate face: (merge_round, sym_a, sym_b,
+    Same merge semantics (the left-to-right non-overlapping fold) and
+    return schema as textstats_bpe_induction: (merge_round, sym_a, sym_b,
     freq)."""
     docs = load_table(spark, sf_dir, "documents")
     syms0 = dl.transform(
@@ -1256,10 +1103,13 @@ def textstats_bpe_induction_batched(
                 f"element_at(syms, i + 1) = {lb}) ELSE false END)"
             )
         has_any = " OR ".join(has_parts)
-        # r15: fused single-pass delta (fold once per affected word, one
-        # weighted explode) — see the gate face's in-loop comment; the
-        # two-branch union doubled per-scan plan analysis on a loop whose
-        # wall is driver-side.
+        # exact pair-count delta, affected words only: their old pairs at
+        # -wc, their folded pairs at +wc. r15: fused into ONE pass (fold
+        # once per affected word, one weighted explode); the two-branch
+        # union re-embedded the affected-set filter in both branches and
+        # doubled per-scan plan analysis on a loop whose wall is
+        # driver-side. Integer sums are order-independent, so the
+        # (a, b, d) multiset is the same.
         delta = (
             cur.filter(F.expr(has_any))
             .selectExpr("wc", "syms", f"{fold_expr} AS fsyms")
@@ -1284,9 +1134,12 @@ def textstats_bpe_induction_batched(
                 counts[k] = nv
             else:
                 counts.pop(k, None)
-        # LAZY checkpoint (r14): next scan's delta collect materializes
-        # the rewrite — one job per scan instead of two (see the gate
-        # face's in-loop comment)
+        # ONE conditional projection rewrites the vocabulary: a folded
+        # relation unioned back in would DOUBLE the partition count every
+        # scan (both union sides inherit cur's partitioning). LAZY
+        # checkpoint (r14): next scan's delta collect materializes the
+        # rewrite — one job per scan instead of two — and lineage still
+        # truncates one scan deep
         cur = cur.select(
             F.expr(f"IF({has_any}, {fold_expr}, syms)").alias("syms"), "wc"
         ).localCheckpoint(eager=False)
@@ -1295,49 +1148,54 @@ def textstats_bpe_induction_batched(
     ).orderBy("merge_round")
 
 
-BPE_TRAIN_TYPE_CAP = 1_000_000  # word types collected for driver training
+# Selection threshold of textstats_bpe_induction: at or under this many
+# word types the whole type table is collected and trained on the driver;
+# above it the distributed batched trainer runs instead
+BPE_TRAIN_TYPE_CAP = 1_000_000
 
 
-def textstats_bpe_induction_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION BPE trainer (round 12, VERDICT r11 item 4 — the weak
-    item): how every shipping trainer (SentencePiece, HF tokenizers)
-    actually structures this job. Spark does the one thing that is
-    corpus-sized — reduce the corpus to the (word, count) TYPE table,
-    one hash agg on a uniform key — and the merge loop runs on the
-    DRIVER over that table with an incremental pair index: zero Spark
-    jobs per round, so the 32 x 2 job-scheduling floors that made the
-    distributed sequential face the suite's heaviest line (6.2 s warm at
-    sf0.1, 3 rounds running) vanish. Measured: ~0.7 s total at sf0.1.
+def textstats_bpe_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Multi-round BPE tokenizer induction: BPE_INDUCT_ROUNDS iterations
+    of [count adjacent symbol pairs over the word-frequency vocabulary ->
+    take the most frequent pair -> merge it everywhere], the Sennrich et
+    al. training loop. Returns the learned merge table (merge_round,
+    sym_a, sym_b, freq); ties break on (-freq, a, b), the oracle's ORDER
+    BY freq DESC, a ASC, b ASC.
 
-    Why the collect is legitimate model-state, not a driver bottleneck:
-    BPE is DEFINED on the type-frequency table (the corpus enters the
-    algorithm only through it), so it is the exact sufficient statistic —
-    and it is collected capped at the BPE_TRAIN_TYPE_CAP most frequent
-    types (TakeOrderedAndProject: bounded driver memory by construction),
-    the standard trainer move. Word types grow ~O(corpus^0.5) (Heaps), so
-    at 100 TB the cap engages and the tail it drops is exactly the mass a
-    production vocabulary build discards anyway.
+    Shape (round 12, the SentencePiece / HF tokenizers trainer): Spark
+    does the one corpus-sized step — reduce the corpus to the (word,
+    count) TYPE table, one hash agg on a uniform key — and the merge loop
+    runs on the DRIVER over that table with an incremental pair index:
+    zero Spark jobs per round (~5 jobs in all, ~0.7 s at sf0.1). BPE is
+    DEFINED on the type table, so it is the exact sufficient statistic
+    and the collected table is model state, not a driver bottleneck.
 
-    Equality contract: while the corpus has <= cap types (every test SF:
-    sf0.1 has ~33k), the trainer sees the COMPLETE table and the learned
-    merge list is IDENTICAL to the sequential gate face — same
-    left-to-right non-overlapping fold, same (-freq, a, b) tie-break,
-    same affected-word delta maintenance, pinned merge-for-merge at
-    sf0.001/0.01/0.1 plus a fertility-equality readout in
-    tests/test_bpe_prod.py. Past the cap the divergence is the dropped
-    type tail and nothing else (documented, not silent: n_types vs cap is
-    asserted in the test). For the regime where even the capped table is
-    too large to collect, textstats_bpe_induction_batched is the
-    distributed trainer with provably-sequential batching."""
+    Exact at every input size: the table is collected with a limit of
+    BPE_TRAIN_TYPE_CAP + 1 rows, so one extra row tells that the corpus
+    has more types than the driver should hold (types grow ~O(corpus^0.5),
+    Heaps) — then textstats_bpe_induction_batched, the distributed trainer
+    with provably-sequential batching, learns the same list instead. Both
+    paths are pinned merge-for-merge to the DuckDB oracle's full per-round
+    recount (_oracle_bpe_induction) at sf0.001/0.01/0.1, with the fallback
+    forced by a lowered cap, in tests/test_bpe_prod.py.
+
+    The merge applies LEFT-TO-RIGHT NON-OVERLAPPING, BPE's exact pass
+    semantics: append each symbol unless the last output symbol is sym_a
+    and the incoming one is sym_b, in which case fuse them. A just-merged
+    symbol can never re-merge as the pair's left side within the same
+    round (a||b = a requires an empty symbol), so [a,a,a,a,a] with pair
+    (a,a) folds to [aa,aa,a], matching the scanning definition and the
+    oracle's list_reduce fold."""
     docs = load_table(spark, sf_dir, "documents")
     vocab = (
         docs.select(F.explode(F.expr(dl.split_ws(dl.SPARK, "text"))).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("wc"))
-        .orderBy(F.desc("wc"), F.asc("word"))
-        .limit(BPE_TRAIN_TYPE_CAP)
+        .limit(BPE_TRAIN_TYPE_CAP + 1)
         .collect()
     )
+    if len(vocab) > BPE_TRAIN_TYPE_CAP:
+        return textstats_bpe_induction_batched(spark, sf_dir)
     words: list[list[str]] = [list(r["word"]) for r in vocab]
     wcs: list[int] = [int(r["wc"]) for r in vocab]
     counts: dict[tuple[str, str], int] = {}
@@ -1350,7 +1208,7 @@ def textstats_bpe_induction_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
             where.setdefault(p, set()).add(wi)
 
     def fold(syms: list[str], a: str, b: str) -> list[str]:
-        # the SQL aggregate's exact semantics: left-to-right
+        # the batched trainer's SQL aggregate, exactly: left-to-right
         # non-overlapping — append x unless the accumulator's last
         # element is a and x is b, in which case fuse
         out: list[str] = []
@@ -1371,8 +1229,8 @@ def textstats_bpe_induction_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
         merges.append((r, a_val, b_val, freq))
         if r == BPE_INDUCT_ROUNDS:
             break
-        # affected-word delta, the same arithmetic the distributed faces
-        # run as Spark jobs — here it's the pair index lookup
+        # affected-word delta, the same arithmetic the batched trainer
+        # runs as a Spark job — here it's the pair index lookup
         for wi in sorted(where.get((a_val, b_val), ())):
             wc = wcs[wi]
             old = words[wi]
@@ -1445,11 +1303,14 @@ def _oracle_bpe_induction() -> str:
     return f"WITH {', '.join(ctes)}\n{finals}\nORDER BY merge_round"
 
 
-# The learned merge table is MODEL state (a handful of driver rows) shared
-# by the apply/fertility readout — staged per (application, sf_dir) like
-# the kmeans codebook, so consumers price application, not re-training.
 @staged
 def _bpe_merges(spark: SparkSession, sf_dir: str) -> list:
+    """The learned (sym_a, sym_b) merge list of textstats_bpe_induction —
+    the one trainer, on the driver at or under BPE_TRAIN_TYPE_CAP types
+    and batched above it. MODEL state (a handful of driver rows) shared
+    by the apply/fertility readout, staged per (application, sf_dir) like
+    the kmeans codebook, so consumers price application, not
+    re-training."""
     return [
         (r["sym_a"], r["sym_b"])
         for r in textstats_bpe_induction(spark, sf_dir).collect()
@@ -1463,8 +1324,10 @@ def textstats_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratios a tokenizer team actually tracks (symbols/word = fertility,
     chars/symbol = compression).
 
-    The merges come from textstats_bpe_induction (driver model state — it
-    already returns a K-row driver-built table; collecting it is free).
+    The merges come from textstats_bpe_induction through the staged
+    _bpe_merges (driver model state: the trainer collects the word-type
+    table once and returns a K-row driver-built table, ~5 Spark jobs in
+    all, so the first consumer pays training once and later ones nothing).
     Application is vocabulary-bounded like training: per distinct
     (source, word), the BPE_INDUCT_ROUNDS merge folds nest as ONE
     map-side projection (each fold is the same left-to-right

@@ -157,15 +157,12 @@ def all_bench_only() -> dict[str, QueryFn]:
         # (SCALE_SMOKE.md density section)
         "dedup_semantic_cells_prod": similarity.dedup_semantic_cells_prod,
         "sim_ivfpq_ann_prod": similarity.sim_ivfpq_ann_prod,
-        # r12: the BPE trainer's production faces (VERDICT r11 item 4 —
-        # the 3-round heaviest-line weak item). _prod = distributed type
-        # reduction + capped driver trainer (the SentencePiece/HF shape,
-        # ~0.9 s vs the 6.2 s sequential wall); _batched = the
-        # distributed trainer with provably-sequential top-m batching for
-        # the no-collect regime. Both learned merge lists pinned
-        # IDENTICAL to the oracle-gated face at every test SF
-        # (tests/test_bpe_prod.py).
-        "textstats_bpe_induction_prod": textstats.textstats_bpe_induction_prod,
+        # r12: the distributed BPE trainer with provably-sequential top-m
+        # batching — what the gate's textstats_bpe_induction (a driver
+        # trainer over the collected word-type table) runs above
+        # BPE_TRAIN_TYPE_CAP types; benched here so its per-scan cost
+        # stays priced at test SF. Merge list pinned IDENTICAL to the
+        # DuckDB oracle at every test SF (tests/test_bpe_prod.py).
         "textstats_bpe_induction_batched": textstats.textstats_bpe_induction_batched,
     }
 

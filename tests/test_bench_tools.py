@@ -104,3 +104,18 @@ def test_bench_diff_without_adjudicate_fails_on_flags(tmp_path, monkeypatch):
     _write_payload(new, 2.0)
     monkeypatch.setattr(sys, "argv", ["bench_diff.py", str(old), str(new)])
     assert bd.main() == 1
+
+
+def test_bench_names_resolve_and_bench_only_is_benched():
+    """bench.py names its lines by hand: a name left behind after its
+    query is deleted would fail only when the bench runs, and a bench-only
+    registry entry missing from the lists would never be timed."""
+    import bench
+    from realtime_twitter_trends_analytics_spark.registry import (
+        all_bench_only,
+        all_queries,
+    )
+
+    known = set(all_queries()) | set(all_bench_only())
+    assert [n for n in bench.HEADLINE + bench.DEMO if n not in known] == []
+    assert set(all_bench_only()) <= set(bench.HEADLINE) | set(bench.DEMO)

@@ -27,7 +27,7 @@ def test_bench_only_names_disjoint_from_gate():
     # oracle-gated twin: _prod = sketch-only plan of an eval form,
     # _ann (r8) = ANN-composed plan of a brute-force-baseline form,
     # _batched (r12) = distributed batched trainer pinned merge-equal to
-    # its sequential gate twin (tests/test_bpe_prod.py)
+    # the oracle and its gate twin (tests/test_bpe_prod.py)
     for name in extra:
         base, _, suffix = name.rpartition("_")
         assert suffix in ("prod", "ann", "batched") and base in gate, name

@@ -202,8 +202,6 @@ def main() -> int:
     # mechanical but pre-adjudicated — per-round re-litigation was the
     # VERDICT r11 pattern this replaces.
     priced_twins = {
-        "textstats_bpe_induction": "textstats_bpe_induction_prod (driver "
-        "trainer, ~0.9s) / _batched (distributed, provably-equal batching)",
         "grouped_zscore": "grouped_zscore_prod (JVM window twin, ~0.5s; "
         "gate face prices the applyInPandas Arrow boundary by design)",
         "dedup_semantic_cells": "dedup_semantic_cells_prod (derived-K "
