@@ -276,27 +276,13 @@ HEADLINE = [
     "graph_rich_club",
     "stats_skew_kurtosis",
     "docs_length_lognormal",
-    # round-7: production sketch-only twins of the oracle-gated eval
-    # forms (registry.all_bench_only — benched, not correctness-gated):
-    # the eval forms carry in-plan bound checks (second scan + verify
-    # join) that roughly double/triple their cost; these lines price
-    # what ships.
-    "percentiles_approx_prod",
-    "events_hll_rollup_prod",
-    "events_hll_sliding_dau_prod",
     # round-8: sketch/bucket production twins of the exact global-sort
-    # segmentation readouts + the ANN-composed RRF fusion (all bench-only;
-    # accuracy pinned vs their exact twins in tests/test_prod_twins.py and
-    # tests/test_rrf_composition.py)
+    # segmentation readouts (bench-only; accuracy pinned vs their exact
+    # twins in tests/test_prod_twins.py)
     "part_abc_classification_prod",
     "events_power_users_gini_prod",
     "customers_rfm_segments_prod",
     "layout_range_splits_prod",
-    "retrieval_rrf_fusion_ann",
-    # round-10: JVM window twin of the applyInPandas grouped-map surface
-    # demo (the one remaining >2x-vs-oracle plan in r9) — bench-only,
-    # equality pinned in tests/test_prod_twins.py
-    "grouped_zscore_prod",
     # round-10: batch twin of the streaming corpus topology — gate ->
     # near-dup dedup -> accounting (oracle-gated)
     "corpus_pipeline_neardup",
@@ -315,11 +301,11 @@ HEADLINE = [
 
 # DELIBERATE surface demos (round 12, VERDICT r11 item 7): queries kept in
 # the suite to PRICE a boundary (grouped_zscore = the applyInPandas
-# grouped-map Arrow round-trip, ~120x its 0.5 s JVM twin by design —
-# see grouped_pandas.py). They are timed and reported under a "demo:"
-# prefix so round-over-round diffs still track them, but they are EXCLUDED
-# from the headline total: the total should price what ships, not what the
-# API-surface demos deliberately pay.
+# grouped-map Arrow round-trip, paid by design — see grouped_pandas.py).
+# They are timed and reported under a "demo:" prefix so round-over-round
+# diffs still track them, but they are EXCLUDED from the headline total:
+# the total should price what ships, not what the API-surface demos
+# deliberately pay.
 DEMO = [
     "grouped_zscore",
 ]

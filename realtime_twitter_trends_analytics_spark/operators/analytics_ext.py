@@ -2090,10 +2090,9 @@ GROUP BY 1, 2 ORDER BY 1, 2
 # promise sketch/bucket-based production forms for the 100 TB case where
 # even part/user grain is hundreds of millions of rows and a global-sort
 # window funnels them through one task. These are those forms — benched as
-# named lines (registry.all_bench_only, the percentiles_approx_prod
-# pattern), accuracy-pinned against the exact twins in
-# tests/test_prod_twins.py, and NOT oracle-gated (the sketch outputs are
-# engine-specific by construction).
+# named lines (registry.all_bench_only), accuracy-pinned against the
+# exact twins in tests/test_prod_twins.py, and NOT oracle-gated (the
+# sketch outputs are engine-specific by construction).
 
 # geometric revenue bucket: floor(ln(cents) * 50) -> ~2% value resolution,
 # ln(1e9)/0.02 ~ 1040 buckets max regardless of corpus size
@@ -3691,8 +3690,8 @@ def lineitem_leadtime_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame
     value-domain grain per flag (lead times are calendar-bounded);
     windows partition by flag over that domain. The exact form IS the
     production form here because the value domain is tiny; for
-    unbounded-domain metrics the approx_percentile twin applies
-    (percentiles_approx_prod)."""
+    unbounded-domain metrics the GK sketch applies
+    (percentiles_approx)."""
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
     base = li.join(o, li["l_orderkey"] == o["o_orderkey"]).select(

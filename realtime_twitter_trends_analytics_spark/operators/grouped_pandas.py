@@ -78,38 +78,6 @@ def grouped_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def grouped_zscore_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production twin of grouped_zscore (round 10, VERDICT r9 item 2):
-    the same per-user z-score as ONE JVM window stage — integer-cents
-    power sums over Window.partitionBy(user_id), identical expression
-    order to the oracle SQL, so the rounded values are bit-equal to the
-    surface demo's (pinned in tests/test_prod_twins.py). The applyInPandas
-    form exists to exercise the grouped-map UDF surface; THIS is the plan
-    a deployment runs, and benching both prices the Arrow boundary +
-    per-group pandas overhead explicitly (the registry's _prod-twin
-    convention). The whens nest so the variance/(n-1) branch is never
-    evaluated for n < 2 groups (ANSI divide-by-zero)."""
-    e = load_table(spark, sf_dir, "events")
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("user_id")
-    base = e.select(
-        "event_id",
-        "user_id",
-        F.round(F.col("value") * 100).cast("bigint").alias("c"),
-    )
-    c = F.col("c")
-    n = F.count(F.lit(1)).over(w)
-    sx = F.sum(c).over(w)
-    sxx = F.sum(c * c).over(w)
-    var = (sxx - sx.cast("double") * sx / n) / (n - F.lit(1))
-    mean = sx.cast("double") / n
-    z = F.when(n < F.lit(2), F.lit(0.0)).otherwise(
-        F.when(var <= F.lit(0), F.lit(0.0)).otherwise((c - mean) / F.sqrt(var))
-    )
-    return base.select("event_id", "user_id", F.round(z, 4).alias("zscore"))
-
-
 # Same integer power sums in SQL; z in cents == z in dollars.
 ORACLE_GROUPED_ZSCORE = """
 WITH cents AS (

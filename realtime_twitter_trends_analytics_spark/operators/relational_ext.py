@@ -140,7 +140,9 @@ def percentiles_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     float boundary to flap). The oracle recomputes group sizes and
     asserts TRUE: GK's bound is a hard guarantee, so a FALSE is a real
     engine bug. This is the in-plan form of the r2-r5 pytest
-    (test_approx_percentile_rank_bound)."""
+    (test_approx_percentile_rank_bound). A deployment runs ``ap`` alone
+    (one scan, one hash agg of GK partials); the broadcast join and the
+    rank counts after it are the eval harness."""
     l = load_table(spark, sf_dir, "lineitem").select(
         "l_linestatus", "l_extendedprice", "l_quantity"
     )
@@ -198,40 +200,6 @@ SELECT l_linestatus, count(*) AS n,
   TRUE AS p99_price_ok, TRUE AS p50_qty_ok
 FROM lineitem GROUP BY 1
 """
-
-
-def percentiles_approx_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of `percentiles_approx`: ONE scan, ONE hash agg of
-    Greenwald-Khanna partial sketches, emit the approx values — what a
-    deployment actually runs. The eval form above adds a second scan +
-    broadcast join to verify the GK rank bound in-plan (that's what made
-    it oracle-checkable in round 6, and what its bench line prices);
-    this form is the sketch-only plan whose cost is the 100 TB story.
-    Bench-only (registry.all_bench_only): the approx values are
-    engine-specific, so there is no value oracle — correctness of the
-    sketch path is gated by the eval form's rank-bound booleans."""
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_linestatus", "l_extendedprice", "l_quantity"
-    )
-    pct = F.expr(
-        f"approx_percentile(l_extendedprice, array(0.5, 0.9, 0.99), {APPROX_PCT_ACCURACY})"
-    )
-    return (
-        l.groupBy("l_linestatus")
-        .agg(
-            pct.alias("pct"),
-            F.expr(
-                f"approx_percentile(l_quantity, 0.5, {APPROX_PCT_ACCURACY})"
-            ).alias("v_qty50"),
-        )
-        .select(
-            "l_linestatus",
-            F.col("pct")[0].alias("v_price50"),
-            F.col("pct")[1].alias("v_price90"),
-            F.col("pct")[2].alias("v_price99"),
-            "v_qty50",
-        )
-    )
 
 
 PRIORITIES = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
@@ -1135,34 +1103,6 @@ FROM est ORDER BY exact DESC, user_id ASC
 """
 
 
-def events_hll_rollup_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of `events_hll_rollup`: daily HLL partials union
-    up to the per-type estimate — sketches only, no exact
-    count_distinct columns riding the shuffles (those are the round-6
-    eval harness that made the rollup oracle-checkable, and they tripled
-    its bench cost: exact distinct shuffles raw user_ids, the sketch
-    shuffles lgK=12 partials). This is the plan an incremental 100 TB
-    cube maintains: persist the daily sketch partials, answer coarser
-    grains by union, never re-scan raw events. Bench-only
-    (registry.all_bench_only): sketch estimates are
-    DataSketches-specific, so value correctness is gated by the eval
-    form's within-5% booleans."""
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy("event_type", F.to_date("ts").alias("day")).agg(
-        F.expr("hll_sketch_agg(user_id)").alias("sk")
-    )
-    return (
-        daily.groupBy("event_type")
-        .agg(
-            F.expr(
-                "CAST(round(hll_sketch_estimate(hll_union_agg(sk))) AS BIGINT)"
-            ).alias("est_users"),
-            F.count(F.lit(1)).alias("n_days"),
-        )
-        .orderBy("event_type")
-    )
-
-
 def events_hll_sliding_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 7-day distinct users per day from MERGED daily HLL
     partials — the windowed face of events_hll_rollup's mergeability
@@ -1180,8 +1120,9 @@ def events_hll_sliding_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-day grain, bounded) and the naive sum of daily exacts, and
     reduces the sketch estimate to two oracle-checkable booleans:
     within 5% of exact (+/-2 absolute floor) and <= the naive sum
-    (union only removes double-counting). Production keeps sketches
-    only — see events_hll_sliding_dau_prod."""
+    (union only removes double-counting). A deployment keeps the sketch
+    columns only; the exact sides (``exact_daily``, ``naive_7d_sum`` and
+    the ``cov``/``exact7`` fan-out) are the eval harness."""
     e = load_table(spark, sf_dir, "events")
     from pyspark.sql.window import Window as W
 
@@ -1247,32 +1188,6 @@ SELECT DATE '1970-01-01' + CAST(w.di AS INT) AS day, w.n_window_days,
 FROM win w JOIN exact7 x ON x.di = w.di
 ORDER BY day
 """
-
-
-def events_hll_sliding_dau_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of events_hll_sliding_dau: daily sketch partials
-    union across the 7-day range window — no exact fan-out, no raw
-    user_id shuffles. The plan a 100 TB metrics store runs nightly:
-    append one daily partial, emit the sliding estimate by merging 7
-    sketches per day. Bench-only (estimates are DataSketches-specific;
-    accuracy is gated by the eval twin's within-5% booleans and pinned
-    in tests/test_round8c_ops.py)."""
-    from pyspark.sql.window import Window as W
-
-    e = load_table(spark, sf_dir, "events")
-    daily = e.groupBy(
-        F.expr("CAST(unix_timestamp(ts) DIV 86400 AS BIGINT)").alias("di")
-    ).agg(F.expr("hll_sketch_agg(user_id)").alias("sk"))
-    w = W.orderBy("di").rangeBetween(-6, 0)
-    return (
-        daily.withColumn("u7", F.expr("hll_union_agg(sk)").over(w))
-        .select(
-            F.expr("date_add(DATE '1970-01-01', CAST(di AS INT))").alias("day"),
-            F.expr("CAST(round(hll_sketch_estimate(u7)) AS BIGINT)").alias("est_7d"),
-            F.count(F.lit(1)).over(w).alias("n_window_days"),
-        )
-        .orderBy("day")
-    )
 
 
 # Fixed alphabetical bit assignment for the audience-overlap bitmask.

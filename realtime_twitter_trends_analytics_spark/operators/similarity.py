@@ -467,10 +467,8 @@ def sim_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _lsh_ann_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multi-probe LSH candidate generator + cosine scorer behind
     sim_lsh_ann, BEFORE any top-k cut: (query_id, cand_id, cosine) for
-    every candidate surfaced by any probed bucket in any table. Shared by
-    sim_lsh_ann (cuts at TOP_K) and retrieval_rrf_fusion_ann (cuts its
-    dense pool at RRF_POOL) — both consume the same candidate machinery,
-    each applying its own depth."""
+    every candidate surfaced by any probed bucket in any table;
+    sim_lsh_ann cuts it at TOP_K."""
     emb = load_table(spark, sf_dir, "embeddings")
     bucketed = emb.select(
         "vec_id",
@@ -2214,10 +2212,9 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the lexical side is posting-list-bounded (terms are filtered
     BEFORE any agg, same plan as textstats_bm25); the dense side is the
-    brute-force baseline whose production form is any of the ANN
-    variants (sim_lsh_ann / sim_ivf_* — same (id, rank) contract, so
-    the fusion composes with them unchanged); both rank windows
-    partition by nothing over <=POOL rows only after per-ranker
+    brute-force baseline (the ANN variants sim_lsh_ann / sim_ivf_*
+    emit the same (id, rank) shape, but none is fused here); both rank
+    windows partition by nothing over <=POOL rows only after per-ranker
     TakeOrdered cuts. Ranks are exact integers; the rrf double is the
     same two-term IEEE expression in both engines. Both rank windows
     order on 1e-6 FIXED-POINT scores (the _quant_cos convention, same as
@@ -2258,8 +2255,7 @@ def retrieval_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rrf_lex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The lexical (BM25) ranking side of the RRF fusion: posting-list
     bounded scoring over the fixed BM25_QUERY term set, cut to a
-    RRF_POOL-deep (doc_id, lex_rank) list — shared by the brute-force
-    and ANN-composed fusion entries."""
+    RRF_POOL-deep (doc_id, lex_rank) list."""
     from .dedup import tokenized_docs_staging
     from .textstats import BM25_B, BM25_K1, BM25_QUERY
 
@@ -2307,9 +2303,8 @@ def _rrf_lex(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _rrf_fuse(lex: DataFrame, dense: DataFrame) -> DataFrame:
     """Fuse a lexical (doc_id, lex_rank) list with a dense (doc_id,
     rank_dense) list: POOL-sized full-outer join + the reciprocal-rank
-    sum. This is the (id, rank) contract the docstring above claims —
-    ANY ranker emitting that shape composes here unchanged (proven for
-    the LSH-ANN dense side in tests/test_rrf_composition.py)."""
+    sum. Missing ranks coalesce to a zero term, so a dense side that
+    surfaces fewer than RRF_POOL ids fuses by the same rule."""
     fused = lex.join(dense, "doc_id", "full_outer").select(
         "doc_id",
         "lex_rank",
@@ -2326,33 +2321,6 @@ def _rrf_fuse(lex: DataFrame, dense: DataFrame) -> DataFrame:
         .filter(F.col("rnk") <= RRF_TOP)
         .select("doc_id", "lex_rank", "rank_dense", F.round("rrf", 6).alias("rrf"), "rnk")
     )
-
-
-def retrieval_rrf_fusion_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """retrieval_rrf_fusion with the PRODUCTION dense side: the dense
-    ranking comes from the multi-probe LSH-ANN candidate generator
-    (sim_lsh_ann's bucket equi-join machinery) instead of the brute-force
-    corpus scan — the composition the fusion docstring promises. The
-    candidate set for query vector 0 is ranked by the same quantized
-    cosine and cut to RRF_POOL (LSH may surface fewer than POOL
-    candidates; RRF's missing-rank coalesce handles that by contract).
-    Bench-only: the oracle-gated fusion keeps the brute-force baseline;
-    this line prices what ships at 100 TB, and
-    tests/test_rrf_composition.py pins its rank overlap vs the
-    brute-force fusion."""
-    lex = _rrf_lex(spark, sf_dir)
-    dense = (
-        _lsh_ann_scored(spark, sf_dir)
-        .filter(F.col("query_id") == 0)
-        .withColumn("cos_q", F.expr(_quant_cos(dl.SPARK, "cosine")))
-        .withColumn(
-            "rank_dense_",
-            F.row_number().over(W.orderBy(F.desc("cos_q"), F.asc("cand_id"))),
-        )
-        .filter(F.col("rank_dense_") <= RRF_POOL)
-        .select(F.col("cand_id").alias("doc_id"), F.col("rank_dense_").alias("rank_dense"))
-    )
-    return _rrf_fuse(lex, dense)
 
 
 def _oracle_rrf() -> str:

@@ -124,45 +124,35 @@ def all_staging() -> dict[str, QueryFn]:
 
 
 def all_bench_only() -> dict[str, QueryFn]:
-    """Production-plan variants benched but NOT in the driver correctness
-    gate: each is the sketch-only / verification-free form of an
-    oracle-gated eval query (the eval twin carries the in-plan bound
-    checks that make the sketch path oracle-checkable; these price the
-    plan a deployment actually runs). Kept out of all_queries() so the
-    gate stays 100% value-oracled — a rows-only registry entry would be
-    a weaker check pretending to be coverage."""
+    """Variants benched but NOT in the oracle correctness gate, kept out
+    of all_queries() so the gate stays 100% value-oracled (a rows-only
+    entry would be a weaker check pretending to be coverage). Three families
+    remain, each entry with its reason to exist next to it:
+
+    - bucket-split segmentation twins of exact global-sort readouts
+      (accuracy pinned vs the exact twins in tests/test_prod_twins.py;
+      tests/test_window_hygiene.py whitelists the exact twins' one-task
+      sorts only because these twins exist);
+    - density-rule faces (K from ml.k_for_corpus), row-identical to the
+      gate query only at bench SF (tests/test_density_rule.py);
+    - the distributed BPE trainer, the gate trainer's fallback above
+      BPE_TRAIN_TYPE_CAP types (merge list pinned to the DuckDB oracle in
+      tests/test_bpe_prod.py).
+    """
     return {
-        "percentiles_approx_prod": relational_ext.percentiles_approx_prod,
-        "events_hll_rollup_prod": relational_ext.events_hll_rollup_prod,
-        "events_hll_sliding_dau_prod": relational_ext.events_hll_sliding_dau_prod,
-        # r8: sketch/bucket twins of the exact global-sort segmentation
-        # readouts (accuracy pinned vs the exact twins in
-        # tests/test_prod_twins.py)
+        # lets test_window_hygiene pass part_abc_classification's global sort
         "part_abc_classification_prod": analytics_ext.part_abc_classification_prod,
+        # lets test_window_hygiene pass events_power_users_gini's global sort
         "events_power_users_gini_prod": analytics_ext.events_power_users_gini_prod,
+        # lets test_window_hygiene pass customers_rfm_segments' global sort
         "customers_rfm_segments_prod": quality.customers_rfm_segments_prod,
+        # lets test_window_hygiene pass layout_range_splits' row-grain sort
         "layout_range_splits_prod": layout.layout_range_splits_prod,
-        # r8: RRF fusion with the LSH-ANN dense side (composition proven in
-        # tests/test_rrf_composition.py; the oracle-gated fusion keeps the
-        # brute-force dense baseline)
-        "retrieval_rrf_fusion_ann": similarity.retrieval_rrf_fusion_ann,
-        # r10: the JVM window form of the applyInPandas grouped-map surface
-        # demo (equality pinned in tests/test_prod_twins.py) — prices the
-        # Arrow boundary + per-group pandas overhead explicitly
-        "grouped_zscore_prod": grouped_pandas.grouped_zscore_prod,
-        # r11: the density-rule face of the SemDeDup report — K derived
-        # from corpus size (ml.k_for_corpus) instead of the oracle-pinned
-        # constant; row-identical to the gate query at bench SF (pinned in
-        # tests/test_density_rule.py), ~linear at 10x density
-        # (SCALE_SMOKE.md density section)
+        # K from corpus size equals the gate's constant K only at bench SF
         "dedup_semantic_cells_prod": similarity.dedup_semantic_cells_prod,
+        # K from corpus size equals the gate's constant K only at bench SF
         "sim_ivfpq_ann_prod": similarity.sim_ivfpq_ann_prod,
-        # r12: the distributed BPE trainer with provably-sequential top-m
-        # batching — what the gate's textstats_bpe_induction (a driver
-        # trainer over the collected word-type table) runs above
-        # BPE_TRAIN_TYPE_CAP types; benched here so its per-scan cost
-        # stays priced at test SF. Merge list pinned IDENTICAL to the
-        # DuckDB oracle at every test SF (tests/test_bpe_prod.py).
+        # the gate trainer's fallback above the type cap; batch_mix measures it
         "textstats_bpe_induction_batched": textstats.textstats_bpe_induction_batched,
     }
 

@@ -1,6 +1,7 @@
 """Unit tests for the round-over-round bench tooling (no Spark session):
-tools/bench_diff.py tier pairing (ADVICE r12) and tools/rebench_flagged.py
-flag parsing (VERDICT r12 item 3)."""
+tools/bench_diff.py tier pairing (ADVICE r12), tools/rebench_flagged.py
+flag parsing (VERDICT r12 item 3) and tools/verify_local.py's cold-cost
+ranking."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.bench_diff import canon_tiers  # noqa: E402
 from tools.rebench_flagged import parse_flags  # noqa: E402
+from tools.verify_local import cold_gaps  # noqa: E402
 
 
 def test_canon_tiers_pairs_demo_rename_across_rounds():
@@ -119,3 +121,18 @@ def test_bench_names_resolve_and_bench_only_is_benched():
     known = set(all_queries()) | set(all_bench_only())
     assert [n for n in bench.HEADLINE + bench.DEMO if n not in known] == []
     assert set(all_bench_only()) <= set(bench.HEADLINE) | set(bench.DEMO)
+
+
+def test_cold_gaps_ranks_first_run_excess_and_skips_failed_runs():
+    """The gate's cold-cost list ranks first_sec - spark_sec, largest
+    first, keeps at most ten, and skips entries whose Spark run failed
+    (no first_sec recorded)."""
+    wall = {f"q{i}": {"spark_sec": 1.0, "first_sec": 1.0 + i} for i in range(12)}
+    wall["staged"] = {"spark_sec": 0.5, "first_sec": 8.5}
+    wall["broken"] = {"status": "spark_error"}
+    got = cold_gaps(wall)
+    assert len(got) == 10
+    assert got[0] == ("q11", 11.0, 12.0)
+    assert got[1] == ("q10", 10.0, 11.0)
+    assert ("staged", 8.0, 8.5) in got
+    assert all(name != "broken" for name, _, _ in got)

@@ -147,3 +147,63 @@ def test_gate_falls_back_to_batched_above_type_cap(
     got = _merges(textstats.textstats_bpe_induction(spark, sf_dir))
     assert calls == ([sf_dir] if over_cap else [])
     assert got == _oracle_merges(sf_dir)
+
+
+def _long_tail_documents(path) -> int:
+    """A documents.parquet whose whitespace vocabulary is a long-tailed
+    type table: 3000 word types of 3-12 letters under Zipf counts. Every
+    base word over {a, c, e, g, i} ships with its image under the
+    order-reversing map onto {j, h, f, d, b} at the same count. The two
+    halves share no symbol, so each starting pair count has a tie partner
+    in the other half, and as the map reverses letter order, the tie
+    break on sym_a and the one on sym_b disagree on which twin goes
+    first. Returns the type count."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(20261019)
+    letters = "acegi"
+    swap = str.maketrans(letters, "jhfdb")
+    types: list[str] = []
+    seen: set[str] = set()
+    while len(types) < 3000:
+        w = "".join(rng.choice(list(letters), size=int(rng.integers(3, 13))))
+        if w in seen:
+            continue
+        seen.add(w)
+        types += [w, w.translate(swap)]
+    tokens: list[str] = []
+    for rank in range(len(types) // 2):
+        wc = max(1, int(600 / (rank + 1) ** 1.1))
+        tokens += [types[2 * rank], types[2 * rank + 1]] * wc
+    rng.shuffle(tokens)
+    texts = [" ".join(tokens[i : i + 40]) for i in range(0, len(tokens), 40)]
+    n = len(texts)
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array(range(n), pa.int64()),
+                "text": texts,
+                "lang": ["en"] * n,
+                "source": [f"src{i % 3}" for i in range(n)],
+                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
+            }
+        ),
+        path / "documents.parquet",
+    )
+    return len(types)
+
+
+def test_long_tailed_type_table_learns_oracle_merges(spark, tmp_path):
+    """The test fixtures hold only 31 word types; this corpus has ~3000,
+    many-symbol words and tied pair counts at every rank, and both
+    trainers must still reproduce the oracle's list merge for merge."""
+    n_types = _long_tail_documents(tmp_path)
+    sf = str(tmp_path)
+    assert _word_types(spark, sf).count() == n_types
+    oracle = _oracle_merges(sf)
+    assert len(oracle) == textstats.BPE_INDUCT_ROUNDS
+    assert len({f for _r, _a, _b, f in oracle}) < len(oracle)  # ties ranked
+    assert _merges(textstats_bpe_induction(spark, sf)) == oracle
+    assert _merges(textstats_bpe_induction_batched(spark, sf)) == oracle

@@ -6,9 +6,8 @@ their production twins replace the data-wide single-partition ORDER BY
 windows with bucket/sketch plans (geometric revenue buckets, GK quantile
 grid, approx_percentile boundary lookups + hash-jittered tie split). These
 tests pin each twin within a STATED error bound of its exact twin at the
-bench SF (sf0.1) — the same discipline as percentiles_approx_prod's rank
-bound: the sketch path is benched, the exact path is oracled, and the
-distance between them is a measured, enforced number.
+bench SF (sf0.1): the sketch path is benched, the exact path is oracled,
+and the distance between them is a measured, enforced number.
 
 Measured at pin time (sf0.1, 2026-08):
 - ABC: rev_share A 0.7746 vs 0.80 exact (one boundary-bucket's mass);
@@ -97,19 +96,3 @@ def test_range_splits_prod_balanced_within_sketch_error(spark):
     for a, b in zip(ordered, ordered[1:]):
         assert a["hi_cents"] <= b["lo_cents"], (a, b)
 
-
-def test_grouped_zscore_prod_equals_pandas_surface(spark):
-    """Round-10 twin (VERDICT r9 item 2): the JVM window form must equal
-    the applyInPandas surface demo EXACTLY — not within a sketch bound —
-    because both compute the identical integer-cents power sums in the
-    identical floating-point expression order before the shared
-    round(z, 4). A symmetric exceptAll keeps the comparison distributed
-    (no driver collect of the per-event frame)."""
-    from realtime_twitter_trends_analytics_spark.operators import (
-        grouped_pandas as gp,
-    )
-
-    a = gp.grouped_zscore(spark, SF_BENCH)
-    b = gp.grouped_zscore_prod(spark, SF_BENCH)
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0

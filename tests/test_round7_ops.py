@@ -1,10 +1,5 @@
-"""Round-7 additions: production sketch-only bench twins and the
+"""Round-7 additions: the bench-only registry's naming contract and the
 quantized_vectors staging memoization.
-
-The production forms (registry.all_bench_only) are benched but NOT in the
-driver oracle gate (sketch values are engine-specific); these tests pin
-that they agree with the exact quantities their oracle-gated eval twins
-bound in-plan.
 """
 
 from __future__ import annotations
@@ -12,11 +7,6 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from realtime_twitter_trends_analytics_spark import registry
-from realtime_twitter_trends_analytics_spark.operators.relational_ext import (
-    events_hll_rollup_prod,
-    percentiles_approx_prod,
-)
-from realtime_twitter_trends_analytics_spark.sources.loaders import load_table
 
 
 def test_bench_only_names_disjoint_from_gate():
@@ -24,54 +14,12 @@ def test_bench_only_names_disjoint_from_gate():
     extra = set(registry.all_bench_only())
     assert not (gate & extra)
     # every bench-only form must be the production variant of an
-    # oracle-gated twin: _prod = sketch-only plan of an eval form,
-    # _ann (r8) = ANN-composed plan of a brute-force-baseline form,
-    # _batched (r12) = distributed batched trainer pinned merge-equal to
-    # the oracle and its gate twin (tests/test_bpe_prod.py)
+    # oracle-gated twin: _prod = bucket-split or density-rule plan of a
+    # gated form, _batched (r12) = distributed batched trainer pinned
+    # merge-equal to the oracle and its gate twin (tests/test_bpe_prod.py)
     for name in extra:
         base, _, suffix = name.rpartition("_")
-        assert suffix in ("prod", "ann", "batched") and base in gate, name
-
-
-def test_hll_rollup_prod_matches_exact_within_bound(spark, sf_dir):
-    """The prod rollup's union estimate must satisfy the same 5% (+/-2
-    absolute floor) bound the eval form asserts in-plan — proving the
-    sketch-only plan is the eval plan minus the verification columns,
-    not a different computation."""
-    got = {r["event_type"]: r.asDict() for r in events_hll_rollup_prod(spark, sf_dir).collect()}
-    exact = {
-        r["event_type"]: r["x"]
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count_distinct("user_id").alias("x"))
-        .collect()
-    }
-    assert set(got) == set(exact)
-    for t, row in got.items():
-        assert abs(row["est_users"] - exact[t]) * 100 <= max(5 * exact[t], 200)
-        assert row["n_days"] >= 1
-
-
-def test_percentiles_prod_values_ordered_and_in_range(spark, sf_dir):
-    """Prod form emits the raw GK values; sanity: one row per
-    linestatus, quantile values monotone in p and inside [min, max] of
-    the group (the hard rank bound itself is oracle-gated by the eval
-    twin percentiles_approx)."""
-    bounds = {
-        r["l_linestatus"]: r.asDict()
-        for r in load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_linestatus")
-        .agg(
-            F.min("l_extendedprice").alias("lo"),
-            F.max("l_extendedprice").alias("hi"),
-        )
-        .collect()
-    }
-    rows = percentiles_approx_prod(spark, sf_dir).collect()
-    assert {r["l_linestatus"] for r in rows} == set(bounds)
-    for r in rows:
-        b = bounds[r["l_linestatus"]]
-        assert b["lo"] <= r["v_price50"] <= r["v_price90"] <= r["v_price99"] <= b["hi"]
+        assert suffix in ("prod", "batched") and base in gate, name
 
 
 def test_quantized_vectors_memoized_per_app(spark, sf_dir):

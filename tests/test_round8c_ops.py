@@ -443,27 +443,6 @@ def test_cramers_v_matches_python_contingency(spark, sf_dir):
         assert 0 <= g["cramers_v"] <= 1
 
 
-def test_hll_sliding_prod_matches_exact_within_bound(spark, sf_dir):
-    """The sketch-only sliding-DAU plan satisfies the same 5% (+/-2
-    floor) bound its eval twin asserts in-plan — proving the prod form
-    is the eval plan minus the verification columns."""
-    from realtime_twitter_trends_analytics_spark.operators.relational_ext import (
-        events_hll_sliding_dau,
-        events_hll_sliding_dau_prod,
-    )
-
-    eval_rows = {r["day"]: r for r in events_hll_sliding_dau(spark, sf_dir).collect()}
-    prod_rows = {r["day"]: r for r in events_hll_sliding_dau_prod(spark, sf_dir).collect()}
-    assert set(eval_rows) == set(prod_rows)
-    for day, ev in eval_rows.items():
-        pr = prod_rows[day]
-        assert pr["n_window_days"] == ev["n_window_days"]
-        assert abs(pr["est_7d"] - ev["exact_7d"]) * 100 <= max(
-            5 * ev["exact_7d"], 200
-        ), day
-        assert ev["merged_within_5pct"] and ev["merged_le_naive"]
-
-
 def test_dp_quantile_release_is_replayable_and_valid(spark, sf_dir):
     """The seeded exponential-mechanism release is deterministic across
     runs, stays inside the bin domain, and at eps=1 with this n the

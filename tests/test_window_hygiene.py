@@ -43,8 +43,6 @@ WINDOW_OK: dict[str, str] = {
     "events_power_users_gini_prod": "bucket-grain running totals",
     "customers_rfm_segments_prod": "bucket-grain running totals",
     "layout_range_splits_prod": "bucket-grain running totals",
-    "events_hll_sliding_dau_prod": "calendar-day grain (bounded by the "
-    "date span; sliding window over per-day sketches)",
     # bounded-grain aggregates (grain named; each is orders of magnitude
     # below the fact tables and bounded by construction or by calendar)
     "docs_mixture_weights": "(lang, source)-grain mixture table",
