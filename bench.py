@@ -276,13 +276,6 @@ HEADLINE = [
     "graph_rich_club",
     "stats_skew_kurtosis",
     "docs_length_lognormal",
-    # round-8: sketch/bucket production twins of the exact global-sort
-    # segmentation readouts (bench-only; accuracy pinned vs their exact
-    # twins in tests/test_prod_twins.py)
-    "part_abc_classification_prod",
-    "events_power_users_gini_prod",
-    "customers_rfm_segments_prod",
-    "layout_range_splits_prod",
     # round-10: batch twin of the streaming corpus topology — gate ->
     # near-dup dedup -> accounting (oracle-gated)
     "corpus_pipeline_neardup",

@@ -41,10 +41,3 @@ def audit_plan(label: str, df: DataFrame) -> DataFrame:
 def audit_plans() -> dict[str, str]:
     """All captured (label -> plan string) pairs so far this process."""
     return dict(_PLANS)
-
-
-def audit_reset() -> None:
-    """Forget captured plans (tests use this to re-capture memoized sites
-    in a fresh session; memoized TRAINING is not re-run — only plans that
-    are actually re-built get re-captured)."""
-    _PLANS.clear()

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window as W
 
 from ..functions import dialect as dl
-from ..sources.loaders import fan_out_small, load_table
+from ..sources.loaders import bucket_ranked, fan_out_small, load_table
 
 
 # ---------------------------------------------------------------- gaps/islands
@@ -1484,45 +1484,42 @@ def part_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     the class boundary cannot flap on float rounding.
 
     Plan: lineitem reduces to PART grain first (the only data-sized
-    shuffle); the running-total window sorts the part-grain relation
-    globally — exact-Pareto semantics as the oracle target (the same
-    honest global-sort note as customers_rfm_segments; at 100 TB the
-    production form cuts classes at approx_percentile boundaries). Emits
-    the class-level readout: part count, revenue, revenue share."""
+    shuffle), checkpointed because bucket_ranked reads it twice; the
+    exact running revenue comes from bucket_ranked over geometric revenue
+    buckets floor(ln(cents) * 50) (~2% value resolution, ~1040 buckets at
+    most regardless of part count), so no window sorts the whole part
+    grain in one task, and the revenue total arrives with the per-bucket
+    collect. Emits the class-level readout: part count, revenue, revenue
+    share."""
     li = load_table(spark, sf_dir, "lineitem")
     per_part = li.groupBy("l_partkey").agg(
         F.sum(F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).alias("cents")
-    )
-    wrun = W.orderBy(F.desc("cents"), F.asc("l_partkey")).rowsBetween(
-        W.unboundedPreceding, 0
-    )
-    wall = W.partitionBy()
-    classed = per_part.select(
-        "l_partkey",
+    ).localCheckpoint()
+    ranked, _, total = bucket_ranked(
+        per_part,
+        -F.floor(F.log(F.col("cents")) * 50),
+        [F.desc("cents"), F.asc("l_partkey")],
         "cents",
-        F.sum("cents").over(wrun).alias("run"),
-        F.sum("cents").over(wall).alias("total"),
-    ).select(
-        "l_partkey",
+    )
+    t = F.lit(total).cast("bigint")
+    classed = ranked.select(
         "cents",
-        F.when(F.col("run") * 100 <= F.col("total") * 80, "A")
-        .when(F.col("run") * 100 <= F.col("total") * 95, "B")
+        F.when(F.col("_run") * 100 <= t * 80, "A")
+        .when(F.col("_run") * 100 <= t * 95, "B")
         .otherwise("C")
         .alias("abc_class"),
     )
-    total = per_part.agg(F.sum("cents").alias("t"))
     return (
         classed.groupBy("abc_class")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
             F.sum("cents").alias("rev_cents"),
         )
-        .crossJoin(F.broadcast(total))
         .select(
             "abc_class",
             "n_parts",
             "rev_cents",
-            F.expr(dl.round_ratio(dl.SPARK, "rev_cents", "t")).alias("rev_share"),
+            F.expr(dl.round_ratio(dl.SPARK, "rev_cents", str(total))).alias("rev_share"),
         )
         .orderBy("abc_class")
     )
@@ -1564,29 +1561,24 @@ def events_power_users_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     numerator/denominator and divided ONCE, rounded to 4), so both
     engines agree bit-for-bit.
 
-    Plan: events reduce to user grain (the only data-sized shuffle);
-    the rank window runs over user-grain rows. At 100 TB: user grain is
-    orders of magnitude under event count; for a truly unsortable key
-    space the production form estimates G from a GK quantile sketch of
-    the count distribution."""
+    Plan: events reduce to user grain (the only data-sized shuffle),
+    checkpointed because bucket_ranked reads it twice; the exact rank i
+    comes from bucket_ranked with the count c itself as the bucket (the
+    distinct counts are bounded by the busiest user's activity, not by
+    the user count), so no window sorts the whole user grain in one
+    task."""
     e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    ranked = per_user.select(
-        "c",
-        F.row_number().over(W.orderBy(F.asc("c"), F.asc("user_id"))).alias("i"),
-        F.count(F.lit(1)).over(W.partitionBy()).alias("nn"),
+    per_user = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c")).localCheckpoint()
+    ranked, nn, _ = bucket_ranked(
+        per_user, F.col("c"), [F.asc("c"), F.asc("user_id")]
     )
     agg = ranked.agg(
-        F.sum(F.col("i").cast("bigint") * F.col("c")).alias("ix"),
+        F.sum(F.col("_rn") * F.col("c")).alias("ix"),
         F.sum("c").alias("sx"),
         F.count(F.lit(1)).alias("n"),
         F.sum(
-            # bigint on BOTH sides of the comparison: i is an IntegerType
-            # row_number, and int*int (non-ANSI) wraps past ~21.4M users —
-            # the ix term above already casts for the same reason
-            F.when(
-                F.col("i").cast("bigint") * 100 > F.lit(99) * F.col("nn"), F.col("c")
-            ).otherwise(0)
+            F.when(F.col("_rn") * 100 > F.lit(99 * nn).cast("bigint"), F.col("c"))
+            .otherwise(0)
         ).alias("top1_events"),
     )
     d = dl.SPARK
@@ -1994,9 +1986,8 @@ def part_abc_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
     data-sized shuffle; the half split point is an exact integer-midpoint
     date riding a 1-row broadcast); per-half classification reuses the
     exact cumulative-share rule over part-grain windows PARTITIONED BY
-    half (same honest global-sort note as the base query — the
-    bucket-cut production form of part_abc_classification_prod applies
-    identically per half); the transition matrix is a part-keyed
+    half (each half's part grain sorts in one task; the base query's
+    bucket_ranked form would apply per half); the transition matrix is a part-keyed
     full-outer self-join, absent halves classed 'N'. <= 16 output rows."""
     li = load_table(spark, sf_dir, "lineitem")
     rng = li.agg(
@@ -2083,117 +2074,6 @@ FULL OUTER JOIN (SELECT l_partkey, cls AS to_class, cents AS cents_h2
   USING (l_partkey)
 GROUP BY 1, 2 ORDER BY 1, 2
 """
-
-
-# ------------------------------------------------- production twins (r8)
-# The exact ABC/Gini readouts above are the ORACLE targets; their docstrings
-# promise sketch/bucket-based production forms for the 100 TB case where
-# even part/user grain is hundreds of millions of rows and a global-sort
-# window funnels them through one task. These are those forms — benched as
-# named lines (registry.all_bench_only), accuracy-pinned against the
-# exact twins in tests/test_prod_twins.py, and NOT oracle-gated (the
-# sketch outputs are engine-specific by construction).
-
-# geometric revenue bucket: floor(ln(cents) * 50) -> ~2% value resolution,
-# ln(1e9)/0.02 ~ 1040 buckets max regardless of corpus size
-ABC_LOG_SCALE = 50
-
-
-def part_abc_classification_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of part_abc_classification: no global sort over the
-    part grain. Parts hash-agg to (part, cents) as before; parts then
-    hash-agg again into ~1k GEOMETRIC revenue buckets (2% value
-    resolution); the cumulative-revenue 80/95 cuts run over the
-    bucket-grain relation (resolution-bounded, never data-bounded); each
-    part is classed by a BROADCAST join on its bucket id — entirely
-    map-side after the part-grain agg. Class boundaries land on bucket
-    edges instead of exact part ranks, so shares are within one bucket's
-    revenue mass (~2% of total, pinned in tests/test_prod_twins.py) of
-    the exact twin."""
-    li = load_table(spark, sf_dir, "lineitem")
-    per_part = li.groupBy("l_partkey").agg(
-        F.sum(F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)")).alias("cents")
-    )
-    bucketed = per_part.withColumn(
-        "b", F.floor(F.log(F.col("cents").cast("double")) * ABC_LOG_SCALE)
-    )
-    buckets = bucketed.groupBy("b").agg(F.sum("cents").alias("rev"))
-    wrun = W.orderBy(F.desc("b")).rowsBetween(W.unboundedPreceding, 0)
-    classed_buckets = buckets.select(
-        "b",
-        F.when(
-            F.sum("rev").over(wrun) * 100 <= F.sum("rev").over(W.partitionBy()) * 80,
-            "A",
-        )
-        .when(
-            F.sum("rev").over(wrun) * 100 <= F.sum("rev").over(W.partitionBy()) * 95,
-            "B",
-        )
-        .otherwise("C")
-        .alias("abc_class"),
-    )
-    total = per_part.agg(F.sum("cents").alias("t"))
-    return (
-        bucketed.join(F.broadcast(classed_buckets), "b")
-        .groupBy("abc_class")
-        .agg(F.count(F.lit(1)).alias("n_parts"), F.sum("cents").alias("rev_cents"))
-        .crossJoin(F.broadcast(total))
-        .select(
-            "abc_class",
-            "n_parts",
-            "rev_cents",
-            F.expr(dl.round_ratio(dl.SPARK, "rev_cents", "t")).alias("rev_share"),
-        )
-        .orderBy("abc_class")
-    )
-
-
-GINI_GRID_M = 200  # percentile-grid resolution for the sketch Gini
-GINI_GRID_ACC = 10000
-
-
-def events_power_users_gini_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of events_power_users_gini: Gini from a
-    Greenwald-Khanna quantile sketch instead of a global rank window.
-    One per-user hash agg (the only data-sized shuffle), then ONE
-    approx_percentile agg produces a GINI_GRID_M-point equi-probability
-    quantile grid; the grid is an array in a single row, and the discrete
-    Gini rank formula applied to those M values estimates G (the M
-    quantiles are an equi-probability sample of the count distribution).
-    The top-1% share is the grid's upper-tail mass. No window touches the
-    user grain at any scale. Accuracy vs the exact twin is pinned in
-    tests/test_prod_twins.py."""
-    e = load_table(spark, sf_dir, "events")
-    per_user = e.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    m = GINI_GRID_M
-    ps = ", ".join(f"{i / m}" for i in range(1, m + 1))
-    agg = per_user.agg(
-        F.expr(f"approx_percentile(c, array({ps}), {GINI_GRID_ACC})").alias("q"),
-        F.sum("c").alias("sx"),
-        F.count(F.lit(1)).alias("n"),
-    )
-    # rank-formula Gini over the M grid values; top-1% share from the top
-    # 1% of grid points (M/100 values at the upper tail)
-    tail = m // 100
-    return agg.select(
-        "n",
-        F.col("sx").alias("total_events"),
-        F.round(
-            F.expr(
-                f"2 * aggregate(zip_with(q, sequence(1, {m}), (x, i) -> x * CAST(i AS DOUBLE)), 0D, (a, x) -> a + x)"
-                f" / ({m} * aggregate(q, 0D, (a, x) -> a + CAST(x AS DOUBLE)))"
-                f" - CAST({m + 1} AS DOUBLE) / {m}"
-            ),
-            4,
-        ).alias("gini"),
-        F.round(
-            F.expr(
-                f"aggregate(slice(q, {m - tail + 1}, {tail}), 0D, (a, x) -> a + CAST(x AS DOUBLE))"
-                f" / {tail} * (CAST(n AS DOUBLE) / 100) / CAST(sx AS DOUBLE)"
-            ),
-            4,
-        ).alias("top1pct_share"),
-    )
 
 
 # ---------------------------------------------------------------- ACF

@@ -25,7 +25,7 @@ from pyspark.sql.window import Window
 
 from ..audit import audit_plan
 from ..functions import dialect as dl
-from ..sources.loaders import driver_rows_df, fan_out_small, load_table
+from ..sources.loaders import bucket_ranked, fan_out_small, load_table
 from ..staging import staged
 
 # PII patterns, shared verbatim by both engines (no backslash classes, so
@@ -805,17 +805,12 @@ def docs_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs in rank order until the running token total reaches the budget
     (half the corpus tokens), report per-source docs/tokens selected.
 
-    The selection rule is a GLOBAL prefix sum, but the implementation
-    never materializes a global one-task window: (1) docs aggregate into
-    <=1001 permille buckets (one bounded-key shuffle); (2) the
-    bucket-level running total — a 1001-row relation — decides which
-    buckets are wholly in, wholly out, or the single boundary bucket;
-    (3) only INSIDE the boundary bucket does a doc-level cumulative sum
-    run, partitioned BY that bucket, ordered by doc_id. Equivalent to the
-    doc-level global cumsum (the oracle states it that way — prefix sums
-    are monotone, so whole-bucket + boundary-split = doc-level cutoff),
-    but every window is bucket-bounded: the shape that survives a corpus
-    whose doc list does not fit one task.
+    The selection rule is a GLOBAL prefix sum over (permille DESC,
+    doc_id); the running token total comes from bucket_ranked with the
+    permille itself as the bucket (<=1001 buckets at any corpus size), so
+    no window ever holds more than one permille's docs and the corpus
+    total arrives with the per-bucket collect. The oracle states the
+    doc-level global cumsum, so the gate pins the helper's exactness.
 
     Budget and totals are exact BIGINT token counts; no doubles anywhere.
     """
@@ -838,31 +833,17 @@ def docs_token_budget_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"ELSE {dl.int_div(dl.SPARK, '(1000 * n_alpha)', 'n_tok')} END"
         ),
     )
-    total = stats.agg(F.sum("n_tok").alias("t")).collect()[0]["t"]  # scalar agg
+    ranked, _, total = bucket_ranked(
+        stats, -F.col("permille"), [F.desc("permille"), F.asc("doc_id")], "n_tok"
+    )
     budget = total * TOKEN_BUDGET_NUM // TOKEN_BUDGET_DEN
-    buckets = stats.groupBy("permille").agg(F.sum("n_tok").alias("bt"))
-    wb = Window.orderBy(F.desc("permille")).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    bcum = buckets.select(
-        "permille", "bt", F.sum("bt").over(wb).alias("cum_b")
-    ).select(
-        "permille",
-        (F.col("cum_b") <= budget).alias("full_in"),
-        # remaining budget inside the (single) boundary bucket
-        (F.lit(budget) - (F.col("cum_b") - F.col("bt"))).alias("rem"),
-    )
-    wd = Window.partitionBy("permille").orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    flagged = (
-        stats.withColumn("doc_cum", F.sum("n_tok").over(wd))
-        .join(F.broadcast(bcum), "permille")
-        .filter(F.col("full_in") | (F.col("doc_cum") <= F.col("rem")))
-    )
-    return flagged.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs_selected"),
-        F.sum("n_tok").alias("tokens_selected"),
+    return (
+        ranked.filter(F.col("_run") <= F.lit(budget).cast("bigint"))
+        .groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs_selected"),
+            F.sum("n_tok").alias("tokens_selected"),
+        )
     )
 
 
@@ -920,69 +901,6 @@ def _dsir_bucket_arr_sql(d: str) -> str:
     return dl.transform(d, feats, "t", bucket)
 
 
-# Coarse range key for the bucket-split top-K (floor(dsir_logw * SCALE)).
-# 32 slices the observed log-weight range ([-4.3, 1.0] at sf0.1) into ~144
-# occupied buckets with max occupancy ~2% of the pool; the bucket count is
-# bounded by the WEIGHT RANGE (feature count x max |log-ratio|), not by the
-# corpus, so the histogram stays a broadcast-sized relation at any scale.
-# At 100x data per-bucket occupancy grows linearly — the lever is this
-# constant (finer slices), exactly the K_CLUSTERS / LSH_BITS density story
-# in SCALE.md.
-DSIR_RANK_BUCKET_SCALE = 32
-
-
-def _topk_selected_bucket_split(df: DataFrame, k: int) -> DataFrame:
-    """EXACT top-K flag by (dsir_logw DESC, doc_id ASC) with NO corpus-grain
-    single-task sort (r11 — closes VERDICT r10 "What's wrong #1").
-
-    The naive form is ``row_number() OVER (ORDER BY dsir_logw DESC, doc_id)
-    <= k`` — an unpartitioned WindowExec that moves EVERY scored doc to one
-    task. This is the two-phase split the repo already uses for global
-    prefix sums (docs_token_budget_select, layout_range_splits_prod):
-
-    1. bucket each row by the monotone coarse key floor(dsir_logw * SCALE)
-       — one bounded-key hash agg builds the bucket histogram;
-    2. the histogram is DRIVER MODEL STATE (bounded by the weight range,
-       not the corpus — the kmeans-codebook / docs_token_budget_select
-       sufficient-statistic-collect class): running totals computed on the
-       driver classify each bucket wholly-in (cum <= k), wholly-out, or
-       the single boundary bucket with ``rem`` selection slots left;
-    3. the doc-level row_number runs partitioned BY bucket, ordered by the
-       same (dsir_logw DESC, doc_id) key — per-task work is one bucket —
-       and joins the broadcast flag table.
-
-    Exactness: floor(x * SCALE) is monotone in x and ties in dsir_logw
-    always land in the same bucket, so (bucket above boundary) OR
-    (within-bucket rank <= rem) is EXACTLY the global-rank <= k predicate
-    — pinned against the global-window form in tests/test_dsir.py and by
-    the DuckDB oracles, which still state the global form.
-
-    ``df`` is read twice (histogram + rank branch); callers stage the
-    input (dsir_perdoc_staging / a localCheckpoint) so the double read
-    hits materialized rows."""
-    keyed = df.withColumn(
-        "_rb",
-        F.floor(F.col("dsir_logw") * DSIR_RANK_BUCKET_SCALE).cast("bigint"),
-    )
-    hist = keyed.groupBy("_rb").agg(F.count(F.lit(1)).alias("_bn")).collect()
-    flags, cum = [], 0
-    for r in sorted(hist, key=lambda r: -r["_rb"]):
-        # _rem = slots left when this bucket starts; <= 0 for every bucket
-        # past the boundary, so the rank test below is self-gating
-        flags.append((r["_rb"], cum + r["_bn"] <= k, k - cum))
-        cum += r["_bn"]
-    fdf = driver_rows_df(
-        df.sparkSession, flags, "_rb bigint, _full_in boolean, _rem bigint"
-    )
-    wd = Window.partitionBy("_rb").orderBy(F.desc("dsir_logw"), F.asc("doc_id"))
-    return (
-        keyed.withColumn("_rn", F.row_number().over(wd))
-        .join(F.broadcast(fdf), "_rb")
-        .withColumn("selected", F.col("_full_in") | (F.col("_rn") <= F.col("_rem")))
-        .drop("_rb", "_rn", "_full_in", "_rem")
-    )
-
-
 @staged
 def dsir_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, lang, source, b) — one row per hashed-feature instance,
@@ -1010,8 +928,8 @@ def dsir_perdoc_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     log-weight relation, materialized once per (application, sf_dir).
 
     Staged because it is read MORE than once per consumer since r11:
-    _topk_selected_bucket_split reads its input twice inside one job
-    (bucket histogram + rank branch), and corpus_pipeline_v3 reads it
+    bucket_ranked reads its input twice inside one query (bucket
+    histogram + rank branch), and corpus_pipeline_v3 reads it
     again for its own selection pool — without staging, every read would
     re-run the instance-grain hash agg and the broadcast log-ratio join
     over the full feature-instance relation.
@@ -1091,14 +1009,28 @@ def docs_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale); per-doc sums drift only by summation order (~1e-13 relative),
     absorbed by round(4) — the textstats_lm_score convention. The
     selected flag ranks on the ROUNDED weight with doc_id tiebreak, so
-    rank is deterministic whenever the rounded values match; since r11
-    the rank itself runs as the bucket-split two-phase form
-    (_topk_selected_bucket_split) — no corpus-grain single-task window
-    anywhere in the plan. The oracle still states the global row_number
-    form, so the gate pins the split's exactness at every SF."""
+    rank is deterministic whenever the rounded values match; the rank
+    itself is bucket_ranked's exact global row number — no corpus-grain
+    single-task window anywhere in the plan. The oracle still states the
+    global row_number form, so the gate pins the helper's exactness at
+    every SF."""
     perdoc = dsir_perdoc_staging(spark, sf_dir)
-    return _topk_selected_bucket_split(perdoc, DSIR_SELECT_K).select(
-        "doc_id", "lang", "source", "n_features", "dsir_logw", "selected"
+    # Rank bucket floor(dsir_logw * 32), negated for the DESC order: 32
+    # slices the observed log-weight range ([-4.3, 1.0] at sf0.1) into
+    # ~144 occupied buckets, a count bounded by the WEIGHT RANGE (feature
+    # count x max |log-ratio|), not by the corpus.
+    ranked, _, _ = bucket_ranked(
+        perdoc,
+        -F.floor(F.col("dsir_logw") * 32),
+        [F.desc("dsir_logw"), F.asc("doc_id")],
+    )
+    return ranked.select(
+        "doc_id",
+        "lang",
+        "source",
+        "n_features",
+        "dsir_logw",
+        (F.col("_rn") <= DSIR_SELECT_K).alias("selected"),
     )
 
 
@@ -1181,17 +1113,21 @@ def corpus_pipeline_v3(spark: SparkSession, sf_dir: str) -> DataFrame:
     # log-weight), not an absolute threshold: Laplace smoothing shifts the
     # whole log-ratio distribution (on a shared-vocabulary corpus, slightly
     # negative), so only relative order is meaningful — which is also how
-    # DSIR's resampling behaves. Deterministic tiebreak on doc_id; since
-    # r11 the rank runs as the two-phase bucket split
-    # (_topk_selected_bucket_split — no corpus-grain single-task window),
-    # and the cluster-size join moves AFTER the filter so only the
+    # DSIR's resampling behaves. Deterministic tiebreak on doc_id; the
+    # rank is bucket_ranked's exact global row number on the
+    # docs_dsir_weights bucket (no corpus-grain single-task window), and
+    # the cluster-size join moves AFTER the filter so only the
     # V3_SELECT_K survivors join the membership relation. The pool is
-    # localCheckpointed because the split reads it twice (histogram +
+    # localCheckpointed because the helper reads it twice (histogram +
     # rank branch) — the union-fan-out rule.
     pool = audit_plan("v3_selection_pool", gated.join(dsir, "doc_id")).localCheckpoint()
+    ranked, _, _ = bucket_ranked(
+        pool,
+        -F.floor(F.col("dsir_logw") * 32),
+        [F.desc("dsir_logw"), F.asc("doc_id")],
+    )
     sel = (
-        _topk_selected_bucket_split(pool, V3_SELECT_K)
-        .filter(F.col("selected"))
+        ranked.filter(F.col("_rn") <= V3_SELECT_K)
         .join(member, "doc_id", "left")
         .withColumn("cs", F.coalesce("cluster_size", F.lit(1)))
         .withColumn("q_e4", F.expr(_soft_q_e4(dl.SPARK, "cs")))

@@ -18,7 +18,7 @@ from pyspark.sql.window import Window
 
 from ..audit import audit_plan
 from ..functions import dialect as dl
-from ..sources.loaders import load_table
+from ..sources.loaders import bucket_ranked, load_table, ntile
 
 Z_BITS = 10          # bits kept per dimension (user, hour)
 Z_BLOCK_SHIFT = 12   # z >> shift = the "file" a writer would group into
@@ -640,27 +640,24 @@ def layout_range_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     deal identical tiles), reading back each tile's [lo, hi] cents and
     row count.
 
-    This is the EXACT/eval form: the data-wide ORDER BY window is the
-    oracle-checkable definition of "balanced", priced accordingly
-    (percentiles_approx convention). The production twin
-    (layout_range_splits_prod, registry.all_bench_only) plans the same
-    table from an approx_percentile sketch — one pass, no global sort —
-    and tests/test_prod_twins.py pins its balance error against this
-    form. Scale: a planner runs on a SAMPLE or sketch at 100 TB; the
-    exact form exists so the sketch's balance claim is a measured
-    number, not a hope."""
+    The tile comes from bucket_ranked's exact global row number, bucketed
+    by geometric price buckets floor(ln(cents) * 50) (~2% value
+    resolution, a few hundred buckets regardless of row count), so no
+    window sorts lineitem in one task; the input is a projection of one
+    scan, cheap to read twice. The oracle states the data-wide ntile
+    window, so the gate pins the helper's exactness."""
     li = load_table(spark, sf_dir, "lineitem")
     cents = li.select(
         F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("cents"),
         "l_orderkey",
         "l_linenumber",
     )
-    tiled = cents.select(
-        "cents",
-        F.ntile(RANGE_SPLITS)
-        .over(Window.orderBy("cents", "l_orderkey", "l_linenumber"))
-        .alias("split_id"),
+    ranked, n, _ = bucket_ranked(
+        cents,
+        F.floor(F.log(F.col("cents")) * 50),
+        [F.asc("cents"), F.asc("l_orderkey"), F.asc("l_linenumber")],
     )
+    tiled = ranked.select("cents", ntile("_rn", n, RANGE_SPLITS).alias("split_id"))
     return (
         tiled.groupBy("split_id")
         .agg(
@@ -685,50 +682,6 @@ SELECT CAST(split_id AS INT) AS split_id,
   min(cents) AS lo_cents, max(cents) AS hi_cents, count(*) AS n_rows
 FROM tiled GROUP BY split_id ORDER BY split_id
 """
-
-
-def layout_range_splits_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of layout_range_splits: boundaries from ONE
-    approx_percentile sketch pass (no global sort, no single-partition
-    window), bucket assignment by counting boundaries below each row
-    (a 31-element array scan inside codegen), then the same per-split
-    readout. This is the plan a writer actually runs at 100 TB — the
-    sketch is mergeable across executors and the second pass is a plain
-    hash agg. Balance error vs the exact ntile form is pinned in
-    tests/test_prod_twins.py."""
-    li = load_table(spark, sf_dir, "lineitem")
-    cents = li.select(
-        F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("cents")
-    )
-    qs = ", ".join(str(i / RANGE_SPLITS) for i in range(1, RANGE_SPLITS))
-    bounds = cents.agg(
-        F.expr(f"approx_percentile(cents, array({qs}), 10000)").alias("bs")
-    )
-    # bucket by an unrolled CASE over the sorted bounds, highest first —
-    # equivalent to "1 + count of bounds below cents" because the bounds
-    # array is ascending (approx_percentile returns sorted quantiles, so
-    # the highest exceeded index i means all i+1 lower bounds are exceeded
-    # too). The former aggregate() fold is a non-codegen lambda: 31
-    # interpreted steps for EVERY row; the CASE chain is codegen'd
-    # straight-line with early exit (r14: 1.65 -> 0.77 s at sf0.1,
-    # identical rows).
-    whens = " ".join(
-        f"WHEN cents > element_at(bs, {i + 1}) THEN {i + 2}"
-        for i in reversed(range(RANGE_SPLITS - 1))
-    )
-    assigned = cents.join(F.broadcast(bounds)).select(
-        "cents",
-        F.expr(f"CASE {whens} ELSE 1 END").alias("split_id"),
-    )
-    return (
-        assigned.groupBy("split_id")
-        .agg(
-            F.min("cents").alias("lo_cents"),
-            F.max("cents").alias("hi_cents"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .orderBy("split_id")
-    )
 
 
 QUERIES = {

@@ -1121,12 +1121,6 @@ DEAD_CODE_D2 = 1 << 40
 PQ_LITERAL_CEILING = 2048
 
 
-def _pq_literal_ceiling() -> int:
-    """Late read of the module global — tests lower it (monkeypatch) to
-    drive the real encode/serve paths through the relation dispatch."""
-    return PQ_LITERAL_CEILING
-
-
 def _check_pq_literal(n_entries: int) -> None:
     if n_entries > PQ_LITERAL_CEILING:
         raise ValueError(

@@ -26,10 +26,9 @@ production deployment of the same pipeline puts in front of the sink.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window as W
 
 from ..functions import dialect as dl
-from ..sources.loaders import load_table
+from ..sources.loaders import bucket_ranked, load_table, ntile
 
 
 # ---------------------------------------------------------------- profiling
@@ -238,27 +237,31 @@ def customers_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     average monetary per segment.
 
     Scale: the base agg reduces orders to CUSTOMER grain (orders of
-    magnitude smaller); the three ntile windows are global-sort windows
-    over that reduced relation — the honest cost at 100 TB, where the
-    production form swaps ntile for approx_percentile boundary lookups
-    (broadcast, map-side, same segment semantics within sketch error; the
-    exact form here IS the oracle target). Ties are broken by c_custkey
+    magnitude smaller) and is checkpointed, because the three chained
+    ranks read it four times (three histograms and the final plan). Each
+    ntile is computed from bucket_ranked's exact global row number,
+    bucketed by a value-range key (epoch days, the order count itself,
+    geometric cents buckets floor(ln(cents) * 50)), so no window sorts
+    the whole customer grain in one task. Ties are broken by c_custkey
     so ntile assignment is total-order deterministic across engines."""
     o = load_table(spark, sf_dir, "orders")
-    base = o.groupBy("o_custkey").agg(
+    scored = o.groupBy("o_custkey").agg(
         F.max("o_orderdate").alias("last_order"),
         F.count(F.lit(1)).alias("freq"),
         F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("cents"),
-    )
-    r = F.ntile(RFM_TILES).over(W.orderBy(F.desc("last_order"), F.asc("o_custkey")))
-    fr = F.ntile(RFM_TILES).over(W.orderBy(F.desc("freq"), F.asc("o_custkey")))
-    m = F.ntile(RFM_TILES).over(W.orderBy(F.desc("cents"), F.asc("o_custkey")))
-    scored = base.select(
-        "o_custkey",
-        "cents",
-        (r * 100 + fr * 10 + m).alias("segment"),
-    )
-    return scored.groupBy("segment").agg(
+    ).localCheckpoint()
+    for tile, key, bucket in (
+        ("r", "last_order", F.datediff(F.col("last_order"), F.lit("1970-01-01"))),
+        ("f", "freq", F.col("freq")),
+        ("m", "cents", F.floor(F.log(F.col("cents")) * 50)),
+    ):
+        ranked, n, _ = bucket_ranked(
+            scored, -bucket, [F.desc(key), F.asc("o_custkey")]
+        )
+        scored = ranked.withColumn(tile, ntile("_rn", n, RFM_TILES)).drop("_rn")
+    return scored.groupBy(
+        (F.col("r") * 100 + F.col("f") * 10 + F.col("m")).alias("segment")
+    ).agg(
         F.count(F.lit(1)).alias("n_customers"),
         F.expr(
             dl.round_ratio(dl.SPARK, "sum(cents)", f"(count(*) * 100)")
@@ -284,74 +287,6 @@ SELECT CAST(segment AS INT) AS segment, count(*) AS n_customers,
   {dl.round_ratio(d, 'sum(cents)', '(count(*) * 100)')} AS avg_monetary
 FROM scored GROUP BY 1 ORDER BY 1
 """
-
-
-RFM_PCT_ACC = 10000
-
-
-def customers_rfm_segments_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PRODUCTION form of customers_rfm_segments: the three ntile(5)
-    global-sort windows are replaced by approx_percentile BOUNDARY lookups
-    — one sketch agg produces the 20/40/60/80th percentile of each RFM
-    dimension (recency as integer epoch days), the 1-row boundary set
-    broadcasts, and every customer is scored MAP-SIDE by counting
-    boundaries at or below its value (tile = 5 - #bounds<=v, so higher
-    recency/frequency/monetary still means tile 1).
-
-    Tie handling: ntile SPLITS a tie group across tiles (by custkey
-    order); a raw value boundary puts the whole group in one tile, which
-    on the discrete freq dimension moved 14% of customers (measured
-    sf0.1). So the discrete dimensions (recency days, freq) are scored on
-    a HASH-JITTERED key — value * 2^32 + xxhash64(custkey) mod 2^32 —
-    which preserves the value order and splits ties deterministically
-    pseudo-randomly, the map-side analogue of ntile's arbitrary tie
-    split. Monetary (exact cents, effectively continuous) stays raw to
-    keep its bigint range safe. Segment-count distribution distance vs
-    the exact twin is pinned in tests/test_prod_twins.py. Bench-only
-    (registry.all_bench_only): sketch boundaries are engine-specific,
-    the exact twin IS the oracle target."""
-    o = load_table(spark, sf_dir, "orders")
-    j = "(CAST(pmod(xxhash64(o_custkey), 4294967296) AS BIGINT))"
-    base = o.groupBy("o_custkey").agg(
-        F.datediff(F.max("o_orderdate"), F.lit("1970-01-01").cast("date")).alias(
-            "last_days"
-        ),
-        F.count(F.lit(1)).alias("freq"),
-        F.sum(F.expr("CAST(round(o_totalprice * 100) AS BIGINT)")).alias("cents"),
-    ).select(
-        "cents",
-        F.expr(f"last_days * 4294967296 + {j}").alias("r_key"),
-        F.expr(f"freq * 4294967296 + {j}").alias("f_key"),
-    )
-    qs = "array(0.2, 0.4, 0.6, 0.8)"
-    bounds = base.agg(
-        F.expr(f"approx_percentile(r_key, {qs}, {RFM_PCT_ACC})").alias("rb"),
-        F.expr(f"approx_percentile(f_key, {qs}, {RFM_PCT_ACC})").alias("fb"),
-        F.expr(f"approx_percentile(cents, {qs}, {RFM_PCT_ACC})").alias("mb"),
-    )
-
-    def tile(v: str, b: str):
-        # 5 - (#boundaries <= v): top quintile (v above all 4 bounds) -> 1
-        return F.lit(5) - F.expr(
-            f"aggregate({b}, 0, (a, x) -> a + CASE WHEN {v} >= x THEN 1 ELSE 0 END)"
-        )
-
-    scored = base.crossJoin(F.broadcast(bounds)).select(
-        "cents",
-        (
-            tile("r_key", "rb") * 100 + tile("f_key", "fb") * 10 + tile("cents", "mb")
-        ).alias("segment"),
-    )
-    return (
-        scored.groupBy("segment")
-        .agg(
-            F.count(F.lit(1)).alias("n_customers"),
-            F.expr(
-                dl.round_ratio(dl.SPARK, "sum(cents)", "(count(*) * 100)")
-            ).alias("avg_monetary"),
-        )
-        .orderBy("segment")
-    )
 
 
 # ---------------------------------------------------------------- k-anonymity

@@ -116,8 +116,8 @@ def all_staging() -> dict[str, QueryFn]:
         "kmeans_cells": similarity.kmeans_cell_assignment,
         "bigram_instances": textstats.bigram_instance_staging,
         "dsir_instances": cleaning.dsir_instance_staging,
-        # r11: the per-doc log-weight relation — the bucket-split top-K
-        # reads it twice per job and corpus_pipeline_v3 reads it again
+        # r11: the per-doc log-weight relation — the bucket-offset top-K
+        # reads it twice per query and corpus_pipeline_v3 reads it again
         "dsir_perdoc": cleaning.dsir_perdoc_staging,
         "pq_codebook": lambda s, d: ml.pq_trained(s, d)[1],
     }
@@ -126,13 +126,9 @@ def all_staging() -> dict[str, QueryFn]:
 def all_bench_only() -> dict[str, QueryFn]:
     """Variants benched but NOT in the oracle correctness gate, kept out
     of all_queries() so the gate stays 100% value-oracled (a rows-only
-    entry would be a weaker check pretending to be coverage). Three families
+    entry would be a weaker check pretending to be coverage). Two families
     remain, each entry with its reason to exist next to it:
 
-    - bucket-split segmentation twins of exact global-sort readouts
-      (accuracy pinned vs the exact twins in tests/test_prod_twins.py;
-      tests/test_window_hygiene.py whitelists the exact twins' one-task
-      sorts only because these twins exist);
     - density-rule faces (K from ml.k_for_corpus), row-identical to the
       gate query only at bench SF (tests/test_density_rule.py);
     - the distributed BPE trainer, the gate trainer's fallback above
@@ -140,14 +136,6 @@ def all_bench_only() -> dict[str, QueryFn]:
       tests/test_bpe_prod.py).
     """
     return {
-        # lets test_window_hygiene pass part_abc_classification's global sort
-        "part_abc_classification_prod": analytics_ext.part_abc_classification_prod,
-        # lets test_window_hygiene pass events_power_users_gini's global sort
-        "events_power_users_gini_prod": analytics_ext.events_power_users_gini_prod,
-        # lets test_window_hygiene pass customers_rfm_segments' global sort
-        "customers_rfm_segments_prod": quality.customers_rfm_segments_prod,
-        # lets test_window_hygiene pass layout_range_splits' row-grain sort
-        "layout_range_splits_prod": layout.layout_range_splits_prod,
         # K from corpus size equals the gate's constant K only at bench SF
         "dedup_semantic_cells_prod": similarity.dedup_semantic_cells_prod,
         # K from corpus size equals the gate's constant K only at bench SF

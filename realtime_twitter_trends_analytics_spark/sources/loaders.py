@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from ..session import apply_runtime_confs
 
@@ -137,6 +137,67 @@ def driver_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
     model-state discipline), so one partition is the right physical shape
     at any corpus scale; values and schema are unchanged."""
     return spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
+
+
+def bucket_ranked(df: DataFrame, bucket: Column, order: list, value=None):
+    """Exact global ``row_number`` (``_rn``) and, when ``value`` is given,
+    running ``sum(value)`` (``_run``) over the strict total ``order``,
+    with no one-task sort: ``(ranked_df, n, s)`` with the grand count and
+    sum as driver ints (``s`` is 0 without ``value``).
+
+    ``bucket`` must be non-null and non-decreasing along ``order`` (a
+    monotone function of the leading key, so ties share a bucket), and
+    its distinct count must be bounded by the key's value range, not by
+    the row count (``floor(x * 32)``, a permille, a count, epoch days).
+    Then: per-bucket (count, sum) is a bounded collect, exclusive prefix
+    offsets are computed on the driver and broadcast, and the window runs
+    partitioned BY bucket; offset + within-bucket rank is the global rank.
+    The ``RDD.zipWithIndex`` numbering scheme, keyed by value range.
+
+    ``df`` is read twice (histogram + rank branch): callers stage or
+    checkpoint an input that is expensive to recompute."""
+    keyed = df.withColumn("_bk", bucket)
+    v = F.lit(0) if value is None else value
+    hist = keyed.groupBy("_bk").agg(
+        F.count(F.lit(1)).alias("_n"), F.sum(v).alias("_s")
+    )
+    rows = hist.collect()
+    if any(r["_bk"] is None for r in rows):
+        raise ValueError("bucket_ranked: the bucket expression produced a null")
+    offsets, n, s = [], 0, 0
+    for r in sorted(rows, key=lambda r: r["_bk"]):
+        offsets.append((r["_bk"], n, s))  # exclusive: rows before this bucket
+        n += r["_n"]
+        s += r["_s"] or 0
+    types = {f.name: f.dataType.simpleString() for f in hist.schema}
+    offs = driver_rows_df(
+        df.sparkSession,
+        offsets,
+        f"_bk {types['_bk']}, _on bigint, _os {types['_s']}",
+    )
+    w = Window.partitionBy("_bk").orderBy(*order)
+    out = (
+        keyed.join(F.broadcast(offs), "_bk")
+        .withColumn("_rn", F.row_number().over(w) + F.col("_on"))
+        .withColumn(
+            "_run",
+            F.sum(v).over(w.rowsBetween(Window.unboundedPreceding, 0)) + F.col("_os"),
+        )
+        .drop("_bk", "_on", "_os")
+    )
+    return (out if value is not None else out.drop("_run")), n, s
+
+
+def ntile(rn: str, n: int, tiles: int) -> Column:
+    """``ntile(tiles)`` of the 1-based global row number column ``rn`` over
+    ``n`` rows, as Spark and DuckDB deal it: the first ``n % tiles`` tiles
+    hold one extra row. Integer-typed like Spark's ``ntile``."""
+    q, r = divmod(n, tiles)
+    big = r * (q + 1)  # rows in the larger tiles
+    return F.expr(
+        f"CASE WHEN {rn} <= {big} THEN ({rn} - 1) DIV {q + 1} + 1 "
+        f"ELSE {r} + ({rn} - 1 - {big}) DIV {max(q, 1)} + 1 END"
+    ).cast("int")
 
 
 def fan_out_small(df: DataFrame, spark: SparkSession) -> DataFrame:

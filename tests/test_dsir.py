@@ -109,19 +109,19 @@ def test_target_vocab_outranks_off_vocab(spark, dsir_dir):
 
 
 # ---------------------------------------------------------------- r11: the
-# bucket-split top-K (VERDICT r10 "What's wrong #1"): the two-phase form
-# must EQUAL the naive global-window rank at every boundary position, and
-# the shipped plans must contain no unpartitioned window at all.
+# bucket-offset top-K (VERDICT r10 "What's wrong #1"): bucket_ranked on the
+# DSIR bucket must EQUAL the naive global-window rank at every boundary
+# position, and the shipped plans must contain no unpartitioned window.
 
 import re
 
 from pyspark.sql import Window, functions as F
 
 from realtime_twitter_trends_analytics_spark.operators.cleaning import (
-    _topk_selected_bucket_split,
     corpus_pipeline_v3,
     dsir_perdoc_staging,
 )
+from realtime_twitter_trends_analytics_spark.sources.loaders import bucket_ranked
 
 
 def _global_window_selected(perdoc, k):
@@ -135,9 +135,14 @@ def _global_window_selected(perdoc, k):
 def test_bucket_split_equals_global_window(spark, sf_dir, k):
     """Exactness pin at K values that land the boundary inside different
     buckets (sf0.001 has 50 docs, so k=50/61 also cover the all-selected
-    edge). The bucket-split flag must match the global rank row-for-row."""
+    edge). The bucket-offset flag must match the global rank row-for-row."""
     perdoc = dsir_perdoc_staging(spark, sf_dir)
-    got = _topk_selected_bucket_split(perdoc, k).select("doc_id", "selected")
+    ranked, _, _ = bucket_ranked(
+        perdoc,
+        -F.floor(F.col("dsir_logw") * 32),
+        [F.desc("dsir_logw"), F.asc("doc_id")],
+    )
+    got = ranked.select("doc_id", (F.col("_rn") <= k).alias("selected"))
     want = _global_window_selected(perdoc, k)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0

@@ -4,13 +4,10 @@ keep the suite self-contained) + structural property checks (SURVEY §5.2)."""
 from __future__ import annotations
 
 import math
-import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
-
-from tools.verify_local import compare  # noqa: E402
+from tools.verify_local import compare
 
 from realtime_twitter_trends_analytics_spark.registry import all_oracles, all_queries
 

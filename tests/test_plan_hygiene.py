@@ -31,9 +31,6 @@ CARTESIAN_OK = {
     "sim_matryoshka_eval": "broadcast N_QUERY_VECS-row query set x "
     "candidates — the float side IS the exact-recall oracle "
     "(sim_ann_int8_eval pattern, dimension axis instead of quantization)",
-    "part_abc_classification": "the revenue-total denominator rides a "
-    "1-row broadcast side next to the 3-row class readout "
-    "(scalar-aggregate pattern)",
     "events_uplift_by_tier": "the derived split-day scalar rides a 1-row "
     "broadcast side against the event scan (scalar-aggregate pattern)",
     "events_diff_in_diff": "the derived split-day scalar rides a 1-row "

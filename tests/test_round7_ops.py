@@ -14,8 +14,8 @@ def test_bench_only_names_disjoint_from_gate():
     extra = set(registry.all_bench_only())
     assert not (gate & extra)
     # every bench-only form must be the production variant of an
-    # oracle-gated twin: _prod = bucket-split or density-rule plan of a
-    # gated form, _batched (r12) = distributed batched trainer pinned
+    # oracle-gated twin: _prod = density-rule plan of a gated form,
+    # _batched (r12) = distributed batched trainer pinned
     # merge-equal to the oracle and its gate twin (tests/test_bpe_prod.py)
     for name in extra:
         base, _, suffix = name.rpartition("_")

@@ -43,13 +43,9 @@ same) and are left as they are: floors are never lowered here.
 
 from __future__ import annotations
 
-import sys
-
-sys.path.insert(0, "/root/repo")
-
 import pytest
 
-from bench import (  # noqa: E402
+from bench import (
     streaming_ann_maintain_throughput,
     streaming_corpus_throughput,
     streaming_dedup_throughput,

@@ -1,8 +1,9 @@
-"""docs_token_budget_select: two-phase (bucket totals + boundary split)
-selection must equal the doc-level global prefix-sum spec — exercised on a
-PLANTED corpus whose budget boundary falls strictly inside one quality
-bucket, so the boundary-bucket doc-level split path actually runs (the
-whole-bucket fast path alone cannot produce the right answer here).
+"""docs_token_budget_select: the bucket-offset running total (bucket
+offsets + within-bucket cumsum) must equal the doc-level global
+prefix-sum spec — exercised on a PLANTED corpus whose budget boundary
+falls strictly inside one quality bucket, so the cut lands on the
+within-bucket running sum (whole-bucket totals alone cannot produce the
+right answer here).
 
 Companion to test_skew_blocking.py (planted worst case for a documented
 failure/edge mode); the oracle states the simple global-cumsum form, this

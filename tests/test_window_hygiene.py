@@ -8,9 +8,11 @@ must be either
 - FED BY TakeOrderedAndProject (the bound is physical — the window ranks
   at most the limit's rows), or
 - WHITELISTED here with its bound named: the window's input grain is a
-  bounded relation (calendar days, week numbers, QI buckets, top-K pools)
-  or the query is an exact global readout that ships next to a registered
-  bucket-split ``_prod`` twin (the repo's segmentation convention).
+  bounded relation (calendar days, week numbers, QI buckets, top-K pools).
+
+An exact rank or running total over a data-grain relation takes no
+entry: it runs through ``sources.loaders.bucket_ranked``, whose windows
+are partitioned by a value-range bucket.
 
 A new query with an unbounded one-task sort fails this test with its
 plan line, instead of surfacing two rounds later as a judge finding.
@@ -28,25 +30,9 @@ from realtime_twitter_trends_analytics_spark.registry import (
 # query -> why its unpartitioned window is bounded (the judge-checkable
 # one-liner). "grain" = the window input's row count driver.
 WINDOW_OK: dict[str, str] = {
-    # exact global readouts with registered bucket-split _prod twins
-    "customers_rfm_segments": "customer-grain exact RFM quintile ranks; "
-    "customers_rfm_segments_prod is the bucket-split twin",
-    "part_abc_classification": "part-grain exact revenue running-share; "
-    "part_abc_classification_prod is the bucket-split twin",
-    "events_power_users_gini": "user-grain exact Gini rank; "
-    "events_power_users_gini_prod is the bucket-split twin",
-    "layout_range_splits": "row-grain exact range-split readout; "
-    "layout_range_splits_prod is the bucket-split twin",
-    # the _prod twins' own windows run at BUCKET grain (fixed bucket count)
-    "part_abc_classification_prod": "bucket-grain running totals "
-    "(fixed bucket count by construction)",
-    "events_power_users_gini_prod": "bucket-grain running totals",
-    "customers_rfm_segments_prod": "bucket-grain running totals",
-    "layout_range_splits_prod": "bucket-grain running totals",
     # bounded-grain aggregates (grain named; each is orders of magnitude
     # below the fact tables and bounded by construction or by calendar)
     "docs_mixture_weights": "(lang, source)-grain mixture table",
-    "docs_token_budget_select": "permille-grain (<=1000 rows) budget curve",
     "events_hll_sliding_dau": "calendar-day grain sliding DAU",
     "events_session_depth_dist": "session-depth grain distribution",
     "events_survival_km": "distinct-duration grain KM curve",
