@@ -282,10 +282,6 @@ HEADLINE = [
     # round-12: + the decontamination stage (oracle-gated; stream twin in
     # tests/test_corpus_v4.py)
     "corpus_pipeline_v4",
-    # round-11: the density-rule faces (bench-only; equality at bench SF
-    # pinned in tests/test_density_rule.py)
-    "dedup_semantic_cells_prod",
-    "sim_ivfpq_ann_prod",
     # round-12: the distributed batched BPE trainer, the gate trainer's
     # path above BPE_TRAIN_TYPE_CAP types (merge list pinned to the DuckDB
     # oracle in tests/test_bpe_prod.py)

@@ -262,9 +262,9 @@ def ml_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials do almost all the work, and the output is constant-sized
     regardless of corpus size. All-integer arithmetic (md5-prefix
     folds), so cross-engine equality is exact."""
-    from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_staging
 
-    toks = tokenized_docs_narrow(spark, sf_dir).select(
+    toks = tokenized_docs_staging(spark, sf_dir).select(
         F.explode("toks").alias("w")
     )
     h = toks.selectExpr("w", "md5(w) AS hx").selectExpr(
@@ -2318,10 +2318,10 @@ def ml_feature_hash_tradeoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     VOCABULARY relation (distinct tokens — vocabulary-bounded, not
     corpus-bounded) is built once and each width is one D-bounded agg
     over it."""
-    from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_staging
 
     vocab = (
-        tokenized_docs_narrow(spark, sf_dir)
+        tokenized_docs_staging(spark, sf_dir)
         .select(F.explode("toks").alias("w"))
         .distinct()
         .selectExpr("w", "md5(w) AS hx")

@@ -80,66 +80,19 @@ def shingle_rel(docs: DataFrame) -> DataFrame:
 # (application, sf_dir); registered as the FIRST staging line so its build
 # cost is a named number and every consumer line prices only its own work.
 @staged
-def _tokenized_docs(spark: SparkSession, sf_dir: str) -> "tuple[DataFrame, bool]":
-    """(checkpoint, fanned) — one staging entry, so the fan-out flag can
-    never disagree with the checkpoint it describes."""
+def tokenized_docs_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, lang, source, toks) — documents tokenized once, shared by
+    every token-consuming staging build."""
     # fan_out_small (r14): the local fixture is one row group, so the
     # tokenize — and every shingle/bigram/dsir build stacked on this
     # checkpoint — otherwise runs as ONE task; identity at scale
-    raw = load_table(spark, sf_dir, "documents")
-    docs = fan_out_small(raw, spark)
-    out = audit_plan(
+    docs = fan_out_small(load_table(spark, sf_dir, "documents"), spark)
+    return audit_plan(
         "tokenized_docs",
         docs.select(
             "doc_id", "lang", "source", F.expr(dl.split_ws(dl.SPARK, "text")).alias("toks")
         ),
     ).localCheckpoint()
-    # r15: record whether the floor FIRED (i.e. the checkpoint is
-    # fan-out-wide on a local-small corpus) so LIGHT token-grain
-    # consumers can narrow back in — see tokenized_docs_fanned.
-    return out, docs is not raw
-
-
-def tokenized_docs_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, source, toks) — documents tokenized once, shared by
-    every token-consuming staging build."""
-    return _tokenized_docs(spark, sf_dir)[0]
-
-
-def tokenized_docs_fanned(spark: SparkSession, sf_dir: str) -> bool:
-    """True iff the staging checkpoint above was round-robin fanned to
-    defaultParallelism because the DOCUMENTS scan planned below it (the
-    local single-row-group fixture). r15, VERDICT r14 item 4: the fan-out
-    serves the HEAVY builds stacked on the checkpoint (shingles, DSIR);
-    light token-grain consumers (a single explode + count agg) pay more
-    in per-task launch overhead (~8 ms/task measured on the bench box)
-    than the map work is worth, so they coalesce back down when — and
-    only when — this flag is set. At production scale the scan plans
-    wide, the flag is False by construction, and consumers keep the
-    scan's parallelism."""
-    return _tokenized_docs(spark, sf_dir)[1]
-
-
-TOKEN_AGG_FAN_IN = 4  # read partitions for LIGHT consumers of a fanned ckpt
-
-
-def narrow_token_read(spark: SparkSession, sf_dir: str, df: DataFrame) -> DataFrame:
-    """``df`` (a token-grain relation built on the tokenized-docs staging
-    checkpoint) coalesced back to a bounded fan-in WHEN that checkpoint
-    was fanned (r15, VERDICT r14 item 4). For LIGHT consumers — one
-    explode + a bounded agg — the fan-out's ~32 task launches (~8 ms each
-    measured) cost more than the map work is worth; coalesce is narrow
-    (no shuffle) and the heavy shingle/DSIR builds keep reading the wide
-    form. Identity at production scale: the fanned flag only sets when
-    the scan planned below default parallelism (a local-small fixture)."""
-    if tokenized_docs_fanned(spark, sf_dir):
-        return df.coalesce(TOKEN_AGG_FAN_IN)
-    return df
-
-
-def tokenized_docs_narrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tokenized-docs staging relation through narrow_token_read."""
-    return narrow_token_read(spark, sf_dir, tokenized_docs_staging(spark, sf_dir))
 
 
 # The UNCAPPED distinct-shingle relation sh_all is read by TWO builds (the

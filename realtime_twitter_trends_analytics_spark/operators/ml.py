@@ -30,11 +30,17 @@ from pyspark.sql.window import Window as W
 
 from ..audit import audit_plan
 from ..functions import dialect as dl
-from ..sources.loaders import driver_rows_df, fan_out_small, load_table, register_table_view
+from ..sources.loaders import (
+    driver_rows_df,
+    fan_out_small,
+    load_table,
+    register_table_view,
+    table_row_count,
+)
 from ..staging import staged
 
 EMB_DIM = 64
-K_CLUSTERS = 8       # seeds = vec_id 0..7
+K_CLUSTERS = 8       # floor of k_for_corpus: K never trains below 8
 KMEANS_SCALE = 1024  # fixed-point: q = round(x * 2^10)
 KMEANS_ITERS = 2     # unrolled Lloyd rounds (then one final assignment)
 
@@ -688,18 +694,40 @@ def quantized_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # THE density-sizing rule, in one place (round 11, VERDICT r10 item 2):
 # every cell/bucket-blocked operator whose pair term is O(sum cell^2) keeps
 # its cost ~linear in N only if per-cell occupancy stays bounded — i.e. K
-# must GROW with the corpus. The gate queries pin K = K_CLUSTERS (their
-# oracles replicate the training bit-for-bit at test SFs); production and
-# the density probe derive K from N through this function so the constant
-# stops being a constant. Measured: tools/density_probe.py + SCALE_SMOKE.md.
-# 250 is calibrated so the rule REPRODUCES the gate constant at the bench
-# SF (2000 vectors / 250 = K_CLUSTERS = 8) and grows K past it.
+# must GROW with the corpus. Every learned-cell query, and its DuckDB
+# oracle (oracle_k_sql), trains at K = k_for_corpus(N): SCALE_SMOKE.md
+# measured x10 data growing the semantic-dedup wall x104.6 at a fixed K
+# and x9.9 at the derived K. The rule gives K_CLUSTERS = 8 up to N = 2000
+# (every test fixture up to sf0.1) and grows K past it.
 TARGET_CELL_SIZE = 250
 
 
 def k_for_corpus(n_vectors: int, target_cell_size: int = TARGET_CELL_SIZE) -> int:
-    """K ≈ N / target_cell_size, never below the test-SF default."""
+    """K ≈ N / target_cell_size, never below K_CLUSTERS."""
     return max(K_CLUSTERS, -(-int(n_vectors) // int(target_cell_size)))
+
+
+def learned_k(sf_dir: str, k: "int | None" = None) -> int:
+    """The K a learned-cell build trains at: ``k`` where a caller needs
+    another K, else k_for_corpus over the embeddings row count from the
+    parquet footer (memoized; no Spark job)."""
+    if k is None:
+        return k_for_corpus(table_row_count(sf_dir, "embeddings"))
+    return int(k)
+
+
+def oracle_k_sql() -> str:
+    """DuckDB scalar twin of learned_k: k_for_corpus over count(*) of
+    ``embeddings``."""
+    return (
+        f"(SELECT greatest({K_CLUSTERS}, (count(*) + {TARGET_CELL_SIZE - 1}) "
+        f"// {TARGET_CELL_SIZE}) FROM embeddings)"
+    )
+
+
+def oracle_s_sql() -> str:
+    """DuckDB scalar twin of s_for_k(learned_k): isqrt(K - 1) + 1."""
+    return f"(CAST(floor(sqrt({oracle_k_sql()} - 1)) AS BIGINT) + 1)"
 
 
 def _kmeans_round_label(k: int) -> str:
@@ -724,23 +752,27 @@ def _kmeans_round_label(k: int) -> str:
 # sim_ivf_kmeans_ann + sim_ivf_ann; ml_pq_codebook + sim_pq_adc_ann) train
 # once per application instead of re-running the Lloyd rounds each; the
 # DataFrame faces rebuild a 1-partition relation from the rows.
-def kmeans_centroids(
-    spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
-) -> DataFrame:
+def kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trained centroid relation (cluster, c) after KMEANS_ITERS Lloyd
-    rounds; training staged per (application, sf_dir, k).
-    ``k`` defaults to the gate constant; density-scaled callers pass
-    ``k_for_corpus(N)`` (same seeds rule: vec_id < k)."""
+    rounds; training staged per (application, sf_dir, learned_k)."""
     return driver_rows_df(
-        spark, kmeans_centroid_rows(spark, sf_dir, k), "cluster int, c array<bigint>"
+        spark, kmeans_centroid_rows(spark, sf_dir), "cluster int, c array<bigint>"
     )
 
 
-@staged
 def kmeans_centroid_rows(
-    spark: SparkSession, sf_dir: str, k: int = K_CLUSTERS
+    spark: SparkSession, sf_dir: str, k: "int | None" = None
 ) -> "list[tuple[int, list[int]]]":
-    """Trained centroids as driver rows (training staged per k)."""
+    """Trained centroids as driver rows (seeds = vec_id < K). K is
+    resolved before the staged build, so a default call and an explicit
+    call at the same K share one entry."""
+    return _kmeans_centroid_rows(spark, sf_dir, learned_k(sf_dir, k))
+
+
+@staged
+def _kmeans_centroid_rows(
+    spark: SparkSession, sf_dir: str, k: int
+) -> "list[tuple[int, list[int]]]":
     q = quantized_vectors(spark, sf_dir)
     # Centroids are DRIVER state (K*D BIGINTs), exactly as MLlib
     # treats them: collect the K seed/updated rows and bake them into the
@@ -780,8 +812,9 @@ def kmeans_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-point k-means (K=8, 2 unrolled Lloyd rounds + final assignment)
-    over the embeddings table; returns per-cluster size and exact inertia."""
+    """Fixed-point k-means (K = learned_k, 2 unrolled Lloyd rounds + final
+    assignment) over the embeddings table; returns per-cluster size and
+    exact inertia."""
     final = kmeans_assignment(spark, sf_dir)
     return final.groupBy("cluster").agg(
         F.count(F.lit(1)).alias("n_vecs"), F.sum("d2").alias("inertia")
@@ -801,7 +834,7 @@ def kmeans_oracle_ctes(prefix: str = "") -> tuple[str, str]:
     p = prefix
     ctes = [
         f"{p}q AS (SELECT vec_id, {quant} AS qe FROM embeddings)",
-        f"{p}c0 AS (SELECT CAST(vec_id AS INT) AS cluster, qe AS c FROM {p}q WHERE vec_id < {K_CLUSTERS})",
+        f"{p}c0 AS (SELECT CAST(vec_id AS INT) AS cluster, qe AS c FROM {p}q WHERE vec_id < {oracle_k_sql()})",
     ]
     for i in range(KMEANS_ITERS + 1):
         ctes.append(
@@ -836,15 +869,15 @@ def _oracle_kmeans() -> str:
 @staged
 def two_level_plan_for(spark: SparkSession, sf_dir: str) -> "tuple[list, list]":
     """The sf-table-trained two-level plan (super_rows, group_rows) over
-    the gate k-means centroids."""
+    the trained k-means centroids."""
     return two_level_rows(spark, kmeans_centroid_rows(spark, sf_dir))
 
 
 def ml_kmeans_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-cluster (n_vecs, inertia) of the corpus assigned through the
-    TWO-LEVEL coarse quantizer (nearest_centroid_two_level) at the gate
-    constants: S = s_for_k(8) = 3 super-cells over the trained K=8
-    centroids, p = SUPER_PROBES = 2 probes — genuinely approximate
+    TWO-LEVEL coarse quantizer (nearest_centroid_two_level): S =
+    s_for_k(K) super-cells over the trained K centroids (S = 3 at K = 8),
+    p = SUPER_PROBES = 2 probes — genuinely approximate
     (p < S), so the oracle replicates the FULL two-level semantics (super
     Lloyd training, top-p super ranking, in-group argmin) rather than
     assuming agreement with the flat face. The hash gate therefore pins
@@ -870,7 +903,7 @@ def _oracle_two_level() -> str:
     centroids (identical seed/update/tie semantics), the final grouping,
     top-p super ranking per vector, and the in-group argmin."""
     d = dl.DUCK
-    s = s_for_k(K_CLUSTERS)
+    s = oracle_s_sql()
     fdiv = _FLOOR_DIV.format(s="sum(x)", n="count(*)")
     ctes, _final = kmeans_oracle_ctes()
     parts = [
@@ -1377,7 +1410,7 @@ def _codebook_geom(
     codebook_rows: "list[tuple[int, int, list[int]]]",
 ) -> "tuple[int, int, int]":
     """(n_blocks, sub_dim, n_slots) derived FROM the codebook rows, so the
-    encode/LUT faces work for any PQ geometry, not just the gate constants
+    encode/LUT faces work for any PQ geometry, not just the PQ_* constants
     (ADVICE r13: the serve-bound comments contemplate 16 blocks x 256
     codes). n_slots (the dense LUT width) floors at PQ_K so a gate model
     whose top codeword died keeps the exact pre-r14 padded layout."""
@@ -2184,9 +2217,9 @@ def ml_naive_bayes_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keeps the SQL form's exact shape (same ln/round/quantization on the
     # same exact integers); the DuckDB oracle is unchanged and the gate
     # hash-matches the restructure.
-    from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_staging
 
-    toks = tokenized_docs_narrow(spark, sf_dir).select(
+    toks = tokenized_docs_staging(spark, sf_dir).select(
         "doc_id", "lang", F.explode("toks").alias("token")
     )
     train = toks.filter(F.col("doc_id") % NB_FOLD != 0)

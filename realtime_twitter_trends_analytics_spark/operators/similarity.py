@@ -435,8 +435,8 @@ ANN_LSH_TABLES = 4  # search path: more tables than the dedup path (LSH_TABLES=2
 def lsh_probe_masks(n_bits: int = LSH_BITS) -> list[int]:
     """Hamming<=2 multiprobe XOR masks for an ``n_bits`` bucket space:
     the identity, every 1-bit flip, every 2-bit flip — 1 + n + C(n,2)
-    probes per table. Parametric for the rebucket maintenance path; the
-    gate constant below is this function at LSH_BITS."""
+    probes per table. Parametric for the rebucket maintenance path;
+    LSH_PROBE_MASKS below is this function at LSH_BITS."""
     return (
         [0]
         + [2**b for b in range(n_bits)]
@@ -597,7 +597,7 @@ FROM exploded GROUP BY label, dim
 """
 
 
-IVF_NPROBE = 3  # probe the 3 nearest cells (of K_CLUSTERS=8)
+IVF_NPROBE = 3  # probe the 3 nearest learned cells
 
 
 def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -631,8 +631,8 @@ def sim_ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     qq = quantized_vectors(spark, sf_dir).filter(F.col("vec_id") < N_QUERY_VECS)
     # both the query-side cell ranking and the candidate-side cell
     # assignment ride the dispatched coarse quantizer (ml.nearest_centroid*
-    # — map-side literal expressions at gate K, the broadcast centroid
-    # relation past K_LITERAL_CEILING); at gate K the only exchange in
+    # — map-side literal expressions up to K_LITERAL_CEILING, the broadcast
+    # centroid relation past it); below the ceiling the only exchange in
     # this query is the probe equi-join itself
     probe = nearest_centroid_probes(
         qq, rows, IVF_NPROBE, ["vec_id"], max_rows=N_QUERY_VECS
@@ -708,23 +708,16 @@ def kmeans_cell_assignment(
 ) -> DataFrame:
     """(vec_id, label, embedding, nrm, cell): every vector with its
     hoisted norm and learned-cell id (the dispatched coarse quantizer —
-    ml.nearest_centroid: literal map-side argmin at gate K, broadcast
+    ml.nearest_centroid: literal map-side argmin up to the ceiling, broadcast
     centroid relation past K_LITERAL_CEILING; exact BIGINT distances
-    either way), materialized once per (application, sf_dir, k, face).
-    ``k=None`` trains at the gate constant K_CLUSTERS; the density probe
-    passes ``ml.k_for_corpus(N)`` so occupancy stays bounded as N grows.
+    either way), materialized once per (application, sf_dir, K, face)
+    at K = ml.learned_k(sf_dir, k), so occupancy stays bounded as N grows.
     ``force="relation"`` pins the join face below the ceiling — the
     oracle-gated dedup_semantic_cells_rel twin runs it so the relation
     face is VALUE-oracled, not just pytest-pinned."""
-    from .ml import K_CLUSTERS
+    from .ml import learned_k
 
-    # k=None trains at the gate constant, so it produces the IDENTICAL
-    # assignment as an explicit k=K_CLUSTERS — normalize the staging key or
-    # the _prod twins at bench SF (k_for_corpus -> K_CLUSTERS) would
-    # re-materialize a duplicate eager staging table of the same relation
-    return _kmeans_cell_assignment(
-        spark, sf_dir, K_CLUSTERS if k is None else k, force
-    )
+    return _kmeans_cell_assignment(spark, sf_dir, learned_k(sf_dir, k), force)
 
 
 @staged
@@ -773,23 +766,20 @@ def dedup_semantic_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairwise scan; cells are the same codebook the IVF queries share, so
     at 100 TB one k-means training serves search AND dedup. The self-join
     is a cell-id EQUI-join (per-cell products, never all-pairs); a skewed
-    giant cell is the known failure mode — production raises K so
-    cells stay bounded. The rule lives in ONE place (ml.k_for_corpus) and
-    the defense is MEASURED, not just named: tools/density_probe.py runs
-    this operator at 3x volume with derived K and the pair term returns to
-    ~linear (SCALE_SMOKE.md)."""
-    return _semantic_cells_report(spark, sf_dir, None)
+    giant cell is the known failure mode — K grows with the corpus
+    (ml.k_for_corpus) so cells stay bounded, and at x10 data the pair
+    term stays ~linear (SCALE_SMOKE.md)."""
+    return _semantic_cells_report(spark, sf_dir)
 
 
 def _semantic_cells_report(
-    spark: SparkSession, sf_dir: str, k: int | None,
+    spark: SparkSession, sf_dir: str, k: "int | None" = None,
     force: "str | None" = None,
 ) -> DataFrame:
-    """dedup_semantic_cells body, parametric in the cell count: k=None is
-    the oracle-pinned gate constant (K_CLUSTERS); the density probe passes
-    ml.k_for_corpus(N) so per-cell occupancy — hence the O(sum cell^2)
-    pair term — stays bounded as the corpus grows. ``force`` pins the
-    coarse-quantizer face (dedup_semantic_cells_rel)."""
+    """dedup_semantic_cells body at K = ml.learned_k(sf_dir, k), so
+    per-cell occupancy — hence the O(sum cell^2) pair term — stays
+    bounded as the corpus grows. ``force`` pins the coarse-quantizer face
+    (dedup_semantic_cells_rel)."""
     # EAGER materialization via the shared staging table: cells feeds both
     # self-join sides AND the sizes agg (3 consumers) — un-materialized,
     # the centroid-assignment scan executes once per consumer inside the
@@ -814,7 +804,7 @@ def _semantic_cells_report(
     # Parallelism salt (r14): with K join keys the pair stage runs at most
     # K tasks, and the per-pair cosine (interpreted HOF fold — the
     # engine-exact form; the unrolled element_at variant measured 3.5x
-    # SLOWER) is the dominant cost, so at gate K=8 the stage used ~1/4 of
+    # SLOWER) is the dominant cost, so at K=8 the stage used ~1/4 of
     # a local[32] box. When K < 2 x defaultParallelism, split each cell S
     # ways: the a-side carries a deterministic salt pmod(xxhash64(a_id),
     # S), the b-side replicates S ways, and the join keys on (cell, s) —
@@ -827,18 +817,18 @@ def _semantic_cells_report(
     # unsalted at sf0.1). At production K (k_for_corpus: K >> cores)
     # S = 1 and the plan is byte-identical to the unsalted form — the
     # b-side replication never inflates a corpus-sized shuffle.
-    from .ml import K_CLUSTERS
+    from .ml import learned_k
 
-    k_eff = k if k is not None else K_CLUSTERS
+    n_cells = learned_k(sf_dir, k)
     par = spark.sparkContext.defaultParallelism
-    n_salt = max(1, -(-2 * par // max(1, k_eff)))  # ceil(2*par / K)
+    n_salt = max(1, -(-2 * par // n_cells))  # ceil(2*par / K)
     if n_salt > 1:
         a = a.withColumn(
             "s", F.pmod(F.xxhash64("a_id"), F.lit(n_salt)).cast("int")
-        ).repartition(k_eff * n_salt, "cell", "s")
+        ).repartition(n_cells * n_salt, "cell", "s")
         b = b.withColumn(
             "s", F.explode(F.array(*[F.lit(i) for i in range(n_salt)]))
-        ).repartition(k_eff * n_salt, "cell", "s")
+        ).repartition(n_cells * n_salt, "cell", "s")
         join_keys = ["cell", "s"]
     else:
         join_keys = ["cell"]
@@ -868,27 +858,6 @@ def _semantic_cells_report(
             F.coalesce("n_dup_pairs", F.lit(0)).alias("n_dup_pairs"),
             F.coalesce("n_dropped", F.lit(0)).alias("n_dropped"),
         )
-    )
-
-
-def dedup_semantic_cells_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production sizing face of dedup_semantic_cells (round 11,
-    bench-only per the registry convention): K comes from the corpus
-    through ml.k_for_corpus (K ~= N / TARGET_CELL_SIZE) instead of the
-    oracle-pinned constant, so per-cell occupancy — hence the
-    O(sum cell^2) pair term — is bounded at any N. At the bench SF the
-    rule REPRODUCES the gate constant (2000/250 = K_CLUSTERS), so this
-    face is row-identical to the oracle-gated query there (pinned in
-    tests/test_density_rule.py); at 10x density it is the ~linear arm of
-    the measured defense (SCALE_SMOKE.md: fixed-K wall x104.6 vs derived-K
-    x9.9 for x10 data). N comes from the parquet footer
-    (loaders.table_row_count — the CBO table-stats lookup, zero Spark
-    jobs), not an eager full-scan count() per invocation (ADVICE r11)."""
-    from ..sources.loaders import table_row_count
-    from .ml import k_for_corpus
-
-    return _semantic_cells_report(
-        spark, sf_dir, k_for_corpus(table_row_count(sf_dir, "embeddings"))
     )
 
 
@@ -1052,7 +1021,7 @@ def sim_ivf_kmeans_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     was >=0.85): the query side ranks cells by exact BIGINT centroid
     distance (centroid_topn_sql — a map-side literal expression, probes
     exist only on the broadcast query side) and searches its 2 nearest
-    inverted lists. Candidate coverage doubles (2/K_CLUSTERS of the
+    inverted lists. Candidate coverage doubles (2/K of the
     corpus per query), the candidate-side plan is unchanged. sim_ivf_ann
     remains the deeper nprobe=3 recall path."""
     return _ivf_kmeans_report(spark, sf_dir, None)
@@ -1065,7 +1034,7 @@ def sim_ivf_kmeans_ann_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     FORCED through the broadcast-join centroid relation
     (ml.nearest_centroid*, the K > K_LITERAL_CEILING dispatch target), so
     the scale-safe face is VALUE-ORACLED against the same DuckDB SQL as
-    the literal face, not just pytest-pinned. At gate K the two faces are
+    the literal face, not just pytest-pinned. At any K the two faces are
     row-identical by the min(struct)/array_min tie-order argument in
     ml.nearest_centroid's docstring; this query makes the hash gate
     enforce it every round."""
@@ -1077,14 +1046,14 @@ def dedup_semantic_cells_rel(spark: SparkSession, sf_dir: str) -> DataFrame:
     sim_ivf_kmeans_ann_rel): SemDeDup's cell assignment forced through the
     broadcast-join coarse quantizer, oracle-gated against the identical
     SQL as the literal face."""
-    return _semantic_cells_report(spark, sf_dir, None, force="relation")
+    return _semantic_cells_report(spark, sf_dir, force="relation")
 
 
 def _ivf_kmeans_report(
     spark: SparkSession, sf_dir: str, force: "str | None"
 ) -> DataFrame:
     """sim_ivf_kmeans_ann body, parametric in the coarse-quantizer face
-    (None = dispatch on K — literal at the gate constant; "relation" =
+    (None = dispatch on K — literal below K_LITERAL_CEILING; "relation" =
     the broadcast-join face, oracle-gated via sim_ivf_kmeans_ann_rel)."""
     from .ml import _quant_sql, kmeans_centroid_rows, nearest_centroid_probes
 
@@ -1307,16 +1276,16 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     (query, cand); no full-precision vector moves before the rerank join.
     Exact BIGINT ADC + the shared sequential-double cosine -> the ranking
     is deterministic and the oracle hash-matches."""
-    return _ivfpq_report(spark, sf_dir, None)
+    return _ivfpq_report(spark, sf_dir)
 
 
 def _ivfpq_report(
-    spark: SparkSession, sf_dir: str, k: int | None, adc_observation=None
+    spark: SparkSession, sf_dir: str, k: "int | None" = None,
+    adc_observation=None,
 ) -> DataFrame:
-    """sim_ivfpq_ann body, parametric in the coarse-cell count: k=None is
-    the oracle-pinned gate constant; the _prod face and the density probe
-    pass ml.k_for_corpus(N), which bounds candidates per query at
-    nprobe x TARGET_CELL_SIZE independent of corpus size.
+    """sim_ivfpq_ann body at K = ml.learned_k(sf_dir, k), which bounds
+    candidates per query at nprobe x TARGET_CELL_SIZE independent of
+    corpus size.
 
     ``adc_observation`` (round 12, VERDICT r11 item 1): a
     ``pyspark.sql.Observation`` attached to the rows ENTERING the ADC
@@ -1326,7 +1295,7 @@ def _ivfpq_report(
     cost dominates at probe volume); the observed row count cannot. Free
     when None; when set, the count rides the job's existing pass
     (AggregatingAccumulator) — no second scan. See ivfpq_observed /
-    tools/density_probe.py / tests/test_ivfpq_candidates.py."""
+    tests/test_ivfpq_candidates.py."""
     from .ml import (
         PQ_BLOCKS,
         _pq_assign,
@@ -1338,11 +1307,7 @@ def _ivfpq_report(
 
     emb = load_table(spark, sf_dir, "embeddings")
     asg = kmeans_cell_assignment(spark, sf_dir, k)
-    rows = (
-        kmeans_centroid_rows(spark, sf_dir)
-        if k is None
-        else kmeans_centroid_rows(spark, sf_dir, k)
-    )
+    rows = kmeans_centroid_rows(spark, sf_dir, k)
     blocks, cent = pq_trained(spark, sf_dir)
     codes = _pq_assign(blocks, cent).select("vec_id", "block", "code")
     cellcodes = codes.join(asg.select("vec_id", "cell"), "vec_id")
@@ -1403,26 +1368,7 @@ def _ivfpq_report(
     )
 
 
-def sim_ivfpq_ann_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Production sizing face of sim_ivfpq_ann (round 11, bench-only per
-    the registry convention): the coarse quantizer's K comes from
-    ml.k_for_corpus, so ADC candidates per query are bounded at
-    IVFPQ_NPROBE x TARGET_CELL_SIZE whatever the corpus size — the
-    corpus-INDEPENDENT serve cost the IVF-PQ design exists to buy. At the
-    bench SF the rule reproduces the gate constant, so this face is
-    row-identical to the oracle-gated query there (pinned in
-    tests/test_density_rule.py); the density probe measures the
-    fixed-vs-derived walls at 10x density (SCALE_SMOKE.md). N comes from
-    the parquet footer (loaders.table_row_count), not an eager count()."""
-    from ..sources.loaders import table_row_count
-    from .ml import k_for_corpus
-
-    return _ivfpq_report(
-        spark, sf_dir, k_for_corpus(table_row_count(sf_dir, "embeddings"))
-    )
-
-
-def ivfpq_observed(spark: SparkSession, sf_dir: str, k: int | None):
+def ivfpq_observed(spark: SparkSession, sf_dir: str, k: "int | None" = None):
     """(report_df, Observation) — the IVF-PQ face with the ADC-input row
     counter attached (round 12, VERDICT r11 item 1). After any action on
     the report, ``obs.get["adc_candidate_rows"]`` is the EXACT number of
@@ -1432,9 +1378,8 @@ def ivfpq_observed(spark: SparkSession, sf_dir: str, k: int | None):
     x PQ_BLOCKS. Fixed K: occupancy ~ N/K grows linearly with the corpus,
     so the count does too. Derived K (ml.k_for_corpus): occupancy pinned
     ~TARGET_CELL_SIZE, count flat at |Q| x nprobe x TARGET_CELL_SIZE x
-    PQ_BLOCKS whatever N is. tools/density_probe.py records both arms at
-    x1/x3/x10; tests/test_ivfpq_candidates.py pins the count against the
-    closed form AND the bound on the prod face."""
+    PQ_BLOCKS whatever N is. tests/test_ivfpq_candidates.py pins the
+    count against the closed form AND that bound."""
     from pyspark.sql import Observation
 
     obs = Observation("ivfpq_adc")

@@ -209,10 +209,10 @@ FROM documents
 # distinct-token scan for a scalar that cannot change within a process.
 @staged
 def _corpus_vocab(spark: SparkSession, sf_dir: str) -> int:
-    from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_staging
 
     return int(
-        tokenized_docs_narrow(spark, sf_dir)
+        tokenized_docs_staging(spark, sf_dir)
         .select(F.explode("toks").alias("t"))
         .agg(F.count_distinct("t").alias("v"))
         .collect()[0]["v"]
@@ -247,7 +247,7 @@ def bigram_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once per (application, sf_dir). The explode is map-side;
     consumers aggregate on uniform bigram/w1/source keys. Reads the shared
     tokenized-docs staging relation (r8) instead of re-tokenizing."""
-    from .dedup import narrow_token_read, shingles_sql, tokenized_docs_staging
+    from .dedup import shingles_sql, tokenized_docs_staging
 
     out = (
         tokenized_docs_staging(spark, sf_dir)
@@ -258,12 +258,7 @@ def bigram_instance_staging(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("w1", F.expr("split_part(bigram, ' ', 1)"))
     )
-    out = audit_plan("bigram_instances", out).localCheckpoint()
-    # r15: the checkpoint BUILDS wide (the explode wants the fan-out) but
-    # every consumer is a bounded agg/join over bigram instances — narrow
-    # the read side when the underlying corpus was local-small-fanned
-    # (see dedup.narrow_token_read; identity at scale)
-    return narrow_token_read(spark, sf_dir, out)
+    return audit_plan("bigram_instances", out).localCheckpoint()
 
 
 def textstats_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2143,10 +2138,10 @@ def textstats_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: bigram + unigram hash aggs off the shared tokenized/bigram
     staging relations; two vocabulary-grain equi-joins; the 1-row
     corpus total rides a broadcast; TakeOrdered top-k."""
-    from .dedup import tokenized_docs_narrow  # shared tokenize-once staging
+    from .dedup import tokenized_docs_staging  # shared tokenize-once staging
 
     bg = bigram_instance_staging(spark, sf_dir)
-    toks = tokenized_docs_narrow(spark, sf_dir).select(
+    toks = tokenized_docs_staging(spark, sf_dir).select(
         F.explode("toks").alias("w")
     )
     uni = toks.groupBy("w").agg(F.count(F.lit(1)).alias("c"))
@@ -2234,10 +2229,10 @@ def docs_jsd_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) hash agg; the corpus token marginal is a
     vocabulary-grain re-agg; per-source totals ride a broadcast
     source-grain join and the corpus total a 1-row broadcast."""
-    from .dedup import tokenized_docs_narrow  # shared tokenize-once staging
+    from .dedup import tokenized_docs_staging  # shared tokenize-once staging
 
     cells = (
-        tokenized_docs_narrow(spark, sf_dir)
+        tokenized_docs_staging(spark, sf_dir)
         .select("source", F.explode("toks").alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c_sw"))
@@ -2326,10 +2321,10 @@ def docs_ttr_hapax(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) hash agg, then a source-grain re-agg —
     per-source vocabulary bounded, nothing data-sized after the first
     agg."""
-    from .dedup import tokenized_docs_narrow  # shared tokenize-once staging
+    from .dedup import tokenized_docs_staging  # shared tokenize-once staging
 
     cells = (
-        tokenized_docs_narrow(spark, sf_dir)
+        tokenized_docs_staging(spark, sf_dir)
         .select("source", F.explode("toks").alias("w"))
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2398,9 +2393,9 @@ def textstats_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one tokenize pass (shared staging), one token-grain min-agg,
     then everything is checkpoint-grain (10 rows)."""
-    from .dedup import tokenized_docs_narrow
+    from .dedup import tokenized_docs_staging
 
-    toks = tokenized_docs_narrow(spark, sf_dir).select(
+    toks = tokenized_docs_staging(spark, sf_dir).select(
         "doc_id", F.explode("toks").alias("w")
     )
     n_docs = toks.agg(F.max("doc_id")).first()[0] + 1  # scalar model-state

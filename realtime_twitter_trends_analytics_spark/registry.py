@@ -126,20 +126,12 @@ def all_staging() -> dict[str, QueryFn]:
 def all_bench_only() -> dict[str, QueryFn]:
     """Variants benched but NOT in the oracle correctness gate, kept out
     of all_queries() so the gate stays 100% value-oracled (a rows-only
-    entry would be a weaker check pretending to be coverage). Two families
-    remain, each entry with its reason to exist next to it:
-
-    - density-rule faces (K from ml.k_for_corpus), row-identical to the
-      gate query only at bench SF (tests/test_density_rule.py);
-    - the distributed BPE trainer, the gate trainer's fallback above
-      BPE_TRAIN_TYPE_CAP types (merge list pinned to the DuckDB oracle in
-      tests/test_bpe_prod.py).
+    entry would be a weaker check pretending to be coverage). One family
+    remains, its reason to exist next to it: the distributed BPE trainer,
+    the gate trainer's fallback above BPE_TRAIN_TYPE_CAP types (merge list
+    pinned to the DuckDB oracle in tests/test_bpe_prod.py).
     """
     return {
-        # K from corpus size equals the gate's constant K only at bench SF
-        "dedup_semantic_cells_prod": similarity.dedup_semantic_cells_prod,
-        # K from corpus size equals the gate's constant K only at bench SF
-        "sim_ivfpq_ann_prod": similarity.sim_ivfpq_ann_prod,
         # the gate trainer's fallback above the type cap; batch_mix measures it
         "textstats_bpe_induction_batched": textstats.textstats_bpe_induction_batched,
     }

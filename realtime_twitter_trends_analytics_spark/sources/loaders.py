@@ -77,9 +77,9 @@ _ROW_COUNT_MEMO: dict[tuple[str, int, int], int] = {}
 
 
 def table_row_count(sf_dir: str, name: str) -> int:
-    """Row count from the parquet FOOTER (pyarrow metadata read — zero
-    Spark jobs, no data pages touched). The production-sizing faces
-    (k_for_corpus callers) need N per invocation; an eager full-scan
+    """Row count from the parquet FOOTERS (pyarrow metadata read — zero
+    Spark jobs, no data pages touched) of a single file or a directory of
+    part files. ml.learned_k needs N per invocation; an eager full-scan
     count() per call was the ADVICE r11 fix — on a real warehouse this is
     the table-stats lookup every CBO already does."""
     import pyarrow.parquet as pq
@@ -89,7 +89,11 @@ def table_row_count(sf_dir: str, name: str) -> int:
     key = (path, st.st_mtime_ns, st.st_size)
     n = _ROW_COUNT_MEMO.get(key)
     if n is None:
-        n = pq.ParquetFile(path).metadata.num_rows
+        files = [path] if os.path.isfile(path) else [
+            e.path for e in os.scandir(path)
+            if e.is_file() and not e.name.startswith(("_", "."))
+        ]
+        n = sum(pq.read_metadata(f).num_rows for f in files)
         _ROW_COUNT_MEMO[key] = n
     return n
 

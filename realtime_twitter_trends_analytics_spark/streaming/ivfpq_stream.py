@@ -20,9 +20,9 @@ the model (coarse centroids + PQ codebook) is frozen driver state, so
   equi-join on cell; adc_d2 is 8 array lookups per candidate
   (zip_with(codes, lut)), NO (block, code) shuffle agg like the batch
   face needs; the PQ_RERANK pool reranks by exact cosine on the carried
-  vectors. Per-query cost = nprobe x occupancy — corpus-independent once
-  K tracks N (ml.k_for_corpus), and the candidate volume is the COUNTED
-  quantity of tools/density_probe.py.
+  vectors. Per-query cost = nprobe x occupancy — corpus-independent
+  because K tracks N (ml.k_for_corpus); similarity.ivfpq_observed counts
+  that candidate volume.
 - COMPACT rewrites accumulated epochs into a cell-clustered base
   (repartition on cell; on a real cluster, bucketBy(cell)) with the
   manifest watermark/generation contract shared with the LSH index
@@ -72,13 +72,13 @@ def _quant_expr() -> str:
 
 def build_ivfpq_model(spark: SparkSession, sf_dir: str) -> dict:
     """Generation-1 model from the sf tables: the SAME memoized trainers
-    the batch face uses (kmeans_centroid_rows at the gate K, pq_trained),
+    the batch face uses (kmeans_centroid_rows at ml.learned_k, pq_trained),
     so stream-vs-batch parity is exact by construction."""
-    from ..operators.ml import kmeans_centroid_rows, pq_codebook_rows
+    from ..operators.ml import kmeans_centroid_rows, learned_k, pq_codebook_rows
 
     return {
         "generation": 1,
-        "k": None,  # gate constant (centroid rows below carry the truth)
+        "k": learned_k(sf_dir),
         "centroids": [
             [int(cl), [int(v) for v in c]]
             for cl, c in kmeans_centroid_rows(spark, sf_dir)
@@ -147,7 +147,7 @@ def encode_ivfpq_rows(
     df: DataFrame, model: dict, batch_rows: "int | None" = None
 ) -> DataFrame:
     """(cell, cand_id, codes, cv) from (cand_id, embedding) — the ingest
-    hot path. At gate constants this is ONE projection (literal centroids
+    hot path. Below both ceilings this is ONE projection (literal centroids
     + literal codebook, no joins, no shuffles); both halves dispatch
     independently past their walls (round 14): the coarse cell through
     the broadcast centroid relation past K_LITERAL_CEILING
@@ -179,7 +179,7 @@ def encode_ivfpq_rows(
 
 # Serve-side broadcast bound (round 13, VERDICT r12 item 5): each probe
 # row carries its per-query ADC LUT (PQ_BLOCKS x PQ_K BIGINTs ~ 1 KiB at
-# the gate constants; B x 256 x 8 B ~ 16 KiB for a production 8-bit PQ)
+# the PQ_* constants; B x 256 x 8 B ~ 16 KiB for a production 8-bit PQ)
 # plus the full-precision query vector (EMB_DIM x 8 B), duplicated
 # IVFPQ_NPROBE times by the explode — ~5 KiB per query here, ~60 KiB per
 # query at 8-bit PQ. The broadcast is therefore |Q|-linear: 1e5 queries

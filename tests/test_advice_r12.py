@@ -10,10 +10,10 @@
   planning at warehouse K — past the ceiling the coarse quantizer must be
   a broadcast-join centroid relation, and the guard says so instead of
   letting Catalyst fail opaque.
-- kmeans_cell_assignment memoizes k=None and k=K_CLUSTERS under ONE key
-  (identical output): the _prod twins at bench SF re-use the gate face's
-  staging relation instead of re-materializing a duplicate.
-- loaders.table_row_count (the footer-stats read the _prod faces now use
+- kmeans_cell_assignment memoizes a default call and an explicit call at
+  the derived K under ONE key (identical output), so an explicit caller
+  re-uses the staging relation instead of re-materializing a duplicate.
+- loaders.table_row_count (the footer-stats read ml.learned_k uses
   instead of an eager count()) equals the full-scan count.
 """
 
@@ -24,10 +24,10 @@ import os
 import pytest
 
 from realtime_twitter_trends_analytics_spark.operators.ml import (
-    K_CLUSTERS,
     K_LITERAL_CEILING,
     centroid_argmin_sql,
     centroid_topn_sql,
+    k_for_corpus,
 )
 from realtime_twitter_trends_analytics_spark.operators.similarity import (
     kmeans_cell_assignment,
@@ -96,11 +96,15 @@ def test_literal_centroid_ceiling():
 
 
 def test_cell_assignment_memo_normalized(spark):
-    a = kmeans_cell_assignment(spark, SF, None)
-    b = kmeans_cell_assignment(spark, SF, K_CLUSTERS)
+    a = kmeans_cell_assignment(spark, SF)
+    b = kmeans_cell_assignment(spark, SF, k_for_corpus(table_row_count(SF, "embeddings")))
     assert a is b  # one staging relation, not a duplicate materialization
 
 
-def test_footer_row_count_matches_scan(spark):
+def test_footer_row_count_matches_scan(spark, tmp_path):
     for table in ("embeddings", "documents"):
         assert table_row_count(SF, table) == load_table(spark, SF, table).count()
+    # a Spark-written table is a directory of part files (plus _SUCCESS)
+    emb = load_table(spark, SF, "embeddings")
+    emb.repartition(3).write.parquet(str(tmp_path / "embeddings.parquet"))
+    assert table_row_count(str(tmp_path), "embeddings") == emb.count()

@@ -14,7 +14,7 @@ Pinned here:
 2. The relation face RUNS past the REAL ceiling (4200 centroids — above
    K_LITERAL_CEILING=4096, where the literal face refuses) and matches an
    independent Python brute force, argmin and top-n.
-3. The REAL prod faces (dedup_semantic_cells_prod, sim_ivfpq_ann_prod)
+3. The REAL density-family queries (dedup_semantic_cells, sim_ivfpq_ann)
    run END-TO-END through the relation dispatch — ceiling lowered under
    them (monkeypatch, memos cleared) so k_for_corpus lands above it —
    and their rows EQUAL the literal-face rows (training loops included:
@@ -251,14 +251,12 @@ def test_kmeans_relation_round_audit_label(spark, monkeypatch):
         assert "BroadcastNestedLoopJoin" not in lit
 
 
-# ----------------------------- the REAL prod faces through the dispatch
+# ------------------------- the REAL density queries through the dispatch
 
 
-@pytest.mark.parametrize(
-    "query", ["dedup_semantic_cells_prod", "sim_ivfpq_ann_prod"]
-)
+@pytest.mark.parametrize("query", ["dedup_semantic_cells", "sim_ivfpq_ann"])
 def test_prod_faces_run_past_lowered_ceiling(spark, monkeypatch, query):
-    """END-TO-END: the density family's production faces (k_for_corpus-
+    """END-TO-END: the density family's registered queries (k_for_corpus-
     derived K) run through the relation dispatch — ceiling lowered below
     the derived K so every assignment, probe ranking, AND Lloyd training
     round takes the broadcast-join face — and produce the IDENTICAL rows
@@ -267,7 +265,7 @@ def test_prod_faces_run_past_lowered_ceiling(spark, monkeypatch, query):
     at sandbox N; test_relation_face_runs_past_real_ceiling_* covers the
     real 4096 wall."""
     fn = getattr(sim, query)
-    want = _rows_of(fn(spark, SF))  # literal face (gate K, memoized)
+    want = _rows_of(fn(spark, SF))  # literal face (memoized)
     clear_staging_memos()
     try:
         monkeypatch.setattr(ml, "K_LITERAL_CEILING", 4)

@@ -1,19 +1,24 @@
 """The density-sizing rule (round 11, VERDICT r10 item 2): K derives from
 corpus size in ONE place (ml.k_for_corpus) so the cell-blocked family's
-O(sum cell^2) pair term stays ~linear in N. The rule is calibrated to
-REPRODUCE the gate constant at the bench SF — the oracle-pinned queries
-and the production sizing are the same code path, not a fork. The wall
-measurements live in tools/density_probe.py / SCALE_SMOKE.md; this test
-pins the rule itself and the parametric training/report path.
+O(sum cell^2) pair term stays ~linear in N. Every learned-cell query and
+its oracle train at that K; it equals K_CLUSTERS up to 2000 vectors. The
+wall measurements live in SCALE_SMOKE.md; this test pins the rule itself
+and the parametric training/report path.
 """
 
 from __future__ import annotations
+
+import duckdb
+import pytest
 
 from realtime_twitter_trends_analytics_spark.operators.ml import (
     K_CLUSTERS,
     TARGET_CELL_SIZE,
     k_for_corpus,
     kmeans_centroid_rows,
+    oracle_k_sql,
+    oracle_s_sql,
+    s_for_k,
 )
 from realtime_twitter_trends_analytics_spark.operators.similarity import (
     _semantic_cells_report,
@@ -24,10 +29,9 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_rule_reproduces_gate_constant_at_bench_sf():
-    # 2000 vectors at sf0.1 / TARGET_CELL_SIZE=250 == K_CLUSTERS — the
-    # derived and pinned constants coincide where the oracles run
+    # 2000 vectors at sf0.1 / TARGET_CELL_SIZE=250 == K_CLUSTERS
     assert k_for_corpus(2000) == K_CLUSTERS
-    # never below the gate constant (tiny corpora train the default)
+    # never below the floor (tiny corpora train K_CLUSTERS)
     assert k_for_corpus(1) == K_CLUSTERS
     assert k_for_corpus(500) == K_CLUSTERS
     # grows ceil-linearly past it: occupancy stays <= TARGET_CELL_SIZE
@@ -37,9 +41,19 @@ def test_rule_reproduces_gate_constant_at_bench_sf():
         assert (n + k_for_corpus(n) - 1) // k_for_corpus(n) <= TARGET_CELL_SIZE
 
 
+@pytest.mark.parametrize("n", [1, 500, 2000, 2001, 6000, 6001])
+def test_oracle_k_and_s_match_the_rule(n):
+    """The DuckDB oracles seed k-means at oracle_k_sql() and rank the
+    super level at oracle_s_sql(): both must equal the engine's rule on a
+    planted embeddings table of n rows."""
+    with duckdb.connect() as con:
+        con.execute(f"CREATE TABLE embeddings AS SELECT range AS vec_id FROM range({n})")
+        k, s = con.execute(f"SELECT {oracle_k_sql()}, {oracle_s_sql()}").fetchone()
+    assert (k, s) == (k_for_corpus(n), s_for_k(k_for_corpus(n)))
+
+
 def test_parametric_k_equals_default_where_rule_matches(spark):
-    # at sf0.001 the rule derives the gate constant, so the parametric
-    # report must be row-identical to the registered query
+    # an explicit k equal to the derived K is the registered query
     k = k_for_corpus(500)
     got = sorted(tuple(r) for r in _semantic_cells_report(spark, SF, k).collect())
     want = sorted(tuple(r) for r in dedup_semantic_cells(spark, SF).collect())
@@ -59,32 +73,3 @@ def test_raised_k_trains_and_partitions(spark):
 
     base = dedup_semantic_cells(spark, SF).collect()
     assert cand(rep) < cand(base)
-
-
-def test_prod_twin_equals_gate_query_at_bench_sf(spark):
-    """The registered bench face (dedup_semantic_cells_prod) IS the gate
-    query wherever the rule derives the gate constant — row-identical at
-    the test SFs, so the bench line prices the same plan the oracle
-    checks."""
-    from realtime_twitter_trends_analytics_spark.operators.similarity import (
-        dedup_semantic_cells_prod,
-    )
-    from realtime_twitter_trends_analytics_spark.registry import all_bench_only
-
-    assert all_bench_only()["dedup_semantic_cells_prod"] is dedup_semantic_cells_prod
-    got = sorted(tuple(r) for r in dedup_semantic_cells_prod(spark, SF).collect())
-    want = sorted(tuple(r) for r in dedup_semantic_cells(spark, SF).collect())
-    assert got == want
-
-
-def test_ivfpq_prod_twin_equals_gate_query_at_bench_sf(spark):
-    from realtime_twitter_trends_analytics_spark.operators.similarity import (
-        sim_ivfpq_ann,
-        sim_ivfpq_ann_prod,
-    )
-    from realtime_twitter_trends_analytics_spark.registry import all_bench_only
-
-    assert all_bench_only()["sim_ivfpq_ann_prod"] is sim_ivfpq_ann_prod
-    got = sorted(tuple(r) for r in sim_ivfpq_ann_prod(spark, SF).collect())
-    want = sorted(tuple(r) for r in sim_ivfpq_ann(spark, SF).collect())
-    assert got == want

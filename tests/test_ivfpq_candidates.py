@@ -9,9 +9,8 @@ the scan consumed, and the count must EQUAL the closed form
     sum_q sum_{c in probes(q)} (|c| - [q in c]) * PQ_BLOCKS
 
 and respect the design bound |Q| x IVFPQ_NPROBE x max_occupancy x
-PQ_BLOCKS. The density probe records the same counter at x1/x3/x10 for
-both arms (SCALE_SMOKE.md): fixed K grows with N, derived K stays pinned
-at ~|Q| x nprobe x TARGET_CELL_SIZE x PQ_BLOCKS.
+PQ_BLOCKS. With K derived from N the count stays pinned at ~|Q| x nprobe
+x TARGET_CELL_SIZE x PQ_BLOCKS (SCALE_SMOKE.md: a fixed K grows it with N).
 """
 
 from __future__ import annotations
@@ -31,7 +30,7 @@ from realtime_twitter_trends_analytics_spark.operators.similarity import (
     N_QUERY_VECS,
     ivfpq_observed,
     kmeans_cell_assignment,
-    sim_ivfpq_ann_prod,
+    sim_ivfpq_ann,
 )
 from realtime_twitter_trends_analytics_spark.sources.loaders import table_row_count
 
@@ -46,9 +45,7 @@ def _expected_adc_rows(spark, k: int | None) -> tuple[int, int]:
         r["cell"]: r["n"]
         for r in asg.groupBy("cell").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    rows = kmeans_centroid_rows(spark, SF) if k is None else kmeans_centroid_rows(
-        spark, SF, k
-    )
+    rows = kmeans_centroid_rows(spark, SF, k)
     probes = (
         asg.filter(F.col("vec_id") < N_QUERY_VECS)
         .select(
@@ -83,9 +80,9 @@ def test_adc_candidate_count_matches_closed_form(spark):
 
 
 def test_prod_face_counts_and_matches_gate_rows(spark):
-    """The prod face at test SF: derived K reproduces the gate constant,
-    the counted bound holds, and the report itself is unchanged by the
-    observation plumbing (same rows as the bench-only face)."""
+    """An explicit derived K: the counted bound holds, and the report
+    itself is unchanged by the observation plumbing (same rows as the
+    registered query)."""
     k = k_for_corpus(table_row_count(SF, "embeddings"))
     df, obs = ivfpq_observed(spark, SF, k)
     rows = sorted(map(tuple, df.collect()))
@@ -93,5 +90,5 @@ def test_prod_face_counts_and_matches_gate_rows(spark):
     expected, occ_max = _expected_adc_rows(spark, k)
     assert counted == expected
     assert counted <= N_QUERY_VECS * IVFPQ_NPROBE * occ_max * PQ_BLOCKS
-    plain = sorted(map(tuple, sim_ivfpq_ann_prod(spark, SF).collect()))
+    plain = sorted(map(tuple, sim_ivfpq_ann(spark, SF).collect()))
     assert rows == plain

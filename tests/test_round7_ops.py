@@ -14,12 +14,12 @@ def test_bench_only_names_disjoint_from_gate():
     extra = set(registry.all_bench_only())
     assert not (gate & extra)
     # every bench-only form must be the production variant of an
-    # oracle-gated twin: _prod = density-rule plan of a gated form,
-    # _batched (r12) = distributed batched trainer pinned
-    # merge-equal to the oracle and its gate twin (tests/test_bpe_prod.py)
+    # oracle-gated twin: _batched (r12) = distributed batched trainer
+    # pinned merge-equal to the oracle and its gate twin
+    # (tests/test_bpe_prod.py)
     for name in extra:
         base, _, suffix = name.rpartition("_")
-        assert suffix in ("prod", "batched") and base in gate, name
+        assert suffix == "batched" and base in gate, name
 
 
 def test_quantized_vectors_memoized_per_app(spark, sf_dir):

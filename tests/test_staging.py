@@ -2,15 +2,12 @@
 keyed per (builder, application, sf_dir, args), and clear() empties it.
 
 Pinned here:
-1. The tokenized-docs fan-out flag lives inside the tokenized-docs entry,
-   so asking for the flag first (before any staging build) cannot miss or
-   disagree with the checkpoint it describes.
-2. clear_staging_memos() empties the whole tier after every registered
+1. clear_staging_memos() empties the whole tier after every registered
    staging builder has run — there is no hand-kept list to fall behind.
-3. Defaults are part of the key: an omitted argument and its explicit
-   default value address the same entry.
-4. driver_rows_df plans at one partition for empty input too.
-5. No module in the package forks the tier with its own module-level
+2. The default K resolves before the staged build: an omitted k and the
+   derived K address the same entry.
+3. driver_rows_df plans at one partition for empty input too.
+4. No module in the package forks the tier with its own module-level
    memo dict.
 """
 
@@ -22,11 +19,11 @@ import pathlib
 import realtime_twitter_trends_analytics_spark as pkg
 from realtime_twitter_trends_analytics_spark import staging
 from realtime_twitter_trends_analytics_spark.operators.dedup import (
-    tokenized_docs_fanned,
     tokenized_docs_staging,
 )
 from realtime_twitter_trends_analytics_spark.operators.ml import (
-    K_CLUSTERS,
+    _kmeans_centroid_rows,
+    k_for_corpus,
     kmeans_centroid_rows,
 )
 from realtime_twitter_trends_analytics_spark.registry import (
@@ -35,22 +32,8 @@ from realtime_twitter_trends_analytics_spark.registry import (
 )
 from realtime_twitter_trends_analytics_spark.sources.loaders import (
     driver_rows_df,
-    fan_out_small,
-    load_table,
+    table_row_count,
 )
-
-
-def test_fanned_flag_before_any_staging_build(spark, sf_dir):
-    clear_staging_memos()
-    fanned = tokenized_docs_fanned(spark, sf_dir)
-    raw = load_table(spark, sf_dir, "documents")
-    assert fanned == (fan_out_small(raw, spark) is not raw)
-    # the flag call built the one entry the checkpoint is served from
-    assert len(staging._ENTRIES) == 1
-    ckpt = tokenized_docs_staging(spark, sf_dir)
-    assert len(staging._ENTRIES) == 1
-    if fanned:
-        assert ckpt.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
 def test_clear_empties_every_staged_entry(spark, sf_dir):
@@ -65,19 +48,22 @@ def test_clear_named_builders_only(spark, sf_dir):
     clear_staging_memos()
     tokenized_docs_staging(spark, sf_dir)
     rows = kmeans_centroid_rows(spark, sf_dir)
-    staging.clear(kmeans_centroid_rows)
-    assert kmeans_centroid_rows.key(spark, sf_dir) not in staging._ENTRIES
+    k = k_for_corpus(table_row_count(sf_dir, "embeddings"))
+    staging.clear(_kmeans_centroid_rows)
+    assert _kmeans_centroid_rows.key(spark, sf_dir, k) not in staging._ENTRIES
     assert len(staging._ENTRIES) == 2  # tokenized docs + quantized vectors
     assert kmeans_centroid_rows(spark, sf_dir) == rows
     clear_staging_memos()
 
 
 def test_defaults_are_part_of_the_key(spark, sf_dir):
-    assert kmeans_centroid_rows.key(spark, sf_dir) == kmeans_centroid_rows.key(
-        spark, sf_dir, K_CLUSTERS
-    )
-    assert kmeans_centroid_rows.key(spark, sf_dir) != kmeans_centroid_rows.key(
-        spark, sf_dir, K_CLUSTERS + 1
+    clear_staging_memos()
+    rows = kmeans_centroid_rows(spark, sf_dir)
+    k = k_for_corpus(table_row_count(sf_dir, "embeddings"))
+    assert _kmeans_centroid_rows.key(spark, sf_dir, k) in staging._ENTRIES
+    assert kmeans_centroid_rows(spark, sf_dir, k) is rows
+    assert _kmeans_centroid_rows.key(spark, sf_dir, k) != _kmeans_centroid_rows.key(
+        spark, sf_dir, k + 1
     )
 
 

@@ -134,73 +134,6 @@ def heaviest(from_json: str, top: int) -> list[str]:
     return [name for name, _sec in ranked[:top]]
 
 
-def prod_face_probe(sf_dir: str, runs: int = 2) -> list[str]:
-    """Run the density family's PRODUCTION faces at the fixture (round 12,
-    VERDICT r11 item 3): the gate faces re-measure the fixed-K wall here
-    every round BY DESIGN (they are the oracle-pinned forms); this prints
-    the derived-K faces NEXT TO them — rows-only checks plus a recall
-    floor for the ANN face — so the artifact shows the defended wall
-    beside the gate wall instead of leaving the defense in a separate
-    probe file."""
-    import sys as _sys
-    import time as _time
-
-    _sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from realtime_twitter_trends_analytics_spark.operators.similarity import (
-        TOP_K,
-        dedup_semantic_cells_prod,
-        sim_ivfpq_ann_prod,
-        sim_topk_bruteforce,
-    )
-    from realtime_twitter_trends_analytics_spark.session import get_spark
-
-    spark = get_spark("scale-probe-prod")
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "32")
-    lines = [
-        "",
-        "# density-family PROD faces at the same fixture (derived K via "
-        "ml.k_for_corpus; rows-only + recall floor — these are the "
-        "defended walls next to the gate walls above):",
-    ]
-    try:
-        def wall(df):
-            best = float("inf")
-            for _ in range(runs):
-                t0 = _time.time()
-                df.write.format("noop").mode("overwrite").save()
-                best = min(best, _time.time() - t0)
-            return best
-
-        sem = dedup_semantic_cells_prod(spark, sf_dir)
-        w = wall(sem)
-        n_cells = sem.count()
-        assert n_cells > 0
-        lines.append(
-            f"PROD dedup_semantic_cells_prod: {n_cells} cells "
-            f"(spark {w:.1f}s warm min-of-{runs})"
-        )
-        ivf = sim_ivfpq_ann_prod(spark, sf_dir)
-        w = wall(ivf)
-        got = {(r["query_id"], r["cand_id"]) for r in ivf.collect()}
-        truth = {
-            (r["query_id"], r["cand_id"])
-            for r in sim_topk_bruteforce(spark, sf_dir).collect()
-        }
-        recall = len(got & truth) / max(1, len(truth))
-        floor = 0.5
-        verdict = "PROD" if recall >= floor else "FAIL"
-        lines.append(
-            f"{verdict} sim_ivfpq_ann_prod: {len(got)} rows, recall@{TOP_K} "
-            f"{recall:.2f} vs brute force (floor {floor}) "
-            f"(spark {w:.1f}s warm min-of-{runs})"
-        )
-        return lines
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.stop()
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--top", type=int, default=20)
@@ -210,10 +143,6 @@ def main() -> int:
     ap.add_argument(
         "--rebuild", action="store_true",
         help="force fixture rebuild even if the fingerprint matches",
-    )
-    ap.add_argument(
-        "--skip-prod", action="store_true",
-        help="skip the density-family prod-face section",
     )
     ap.add_argument(
         "--with-ivfpq-serve", action="store_true",
@@ -265,8 +194,6 @@ def main() -> int:
         else:
             in_noise_block = False
         lines.append(ln)
-    if not args.skip_prod:
-        lines += prod_face_probe(sf_dir)
     if args.with_ivfpq_serve:
         p2 = subprocess.run(
             [

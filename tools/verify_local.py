@@ -229,9 +229,9 @@ def main() -> int:
     priced = {
         "grouped_zscore": "the applyInPandas Arrow boundary, by design "
         "(bench.py DEMO line)",
-        "dedup_semantic_cells": "twin dedup_semantic_cells_prod (derived-K "
-        "density rule; equality at bench SF in tests/test_density_rule.py)",
-        "sim_pq_adc_ann": "twin sim_ivfpq_ann / _prod (IVF-bounded candidates)",
+        "dedup_semantic_cells": "the within-cell O(sum cell^2) pair scan; "
+        "ml.k_for_corpus bounds cell occupancy as N grows",
+        "sim_pq_adc_ann": "twin sim_ivfpq_ann (IVF-bounded candidates)",
     }
     if flagged:
         print(
